@@ -345,25 +345,10 @@ class CompiledRule:
     prefilter: str  # literal prefix for cheap vectorized candidate filtering
     frag: str = ""  # the raw fragment (for master-alternation assembly)
     order: int = 0
-    # split at compile: simple captures are plain string assignments
-    simple_specs: list = field(default_factory=list)  # [(gname, name)]
-    complex_specs: list = field(default_factory=list)  # [FieldSpec]
     # constant per-rule event fields: event.tags + tag annotations
     extra_fields: dict = field(default_factory=dict)
 
     def finish(self, annotations: dict):
-        for fs in self.specs:
-            node = fs.node
-            if (
-                fs.sub is None
-                and not _needs_walker(node.ptype, node.params)
-                and "format" not in node.params
-                and "maxval" not in node.params
-                and node.ptype != "v2-iptables"
-            ):
-                self.simple_specs.append((fs.gname, fs.name))
-            else:
-                self.complex_specs.append(fs)
         if self.tags:
             self.extra_fields["event.tags"] = list(self.tags)
             for tag in reversed(self.tags):  # reverse order, annot.c:229
@@ -409,32 +394,48 @@ def compile_rule(rule: Rule, types: dict, ctx: _Ctx | None = None) -> CompiledRu
     )
 
 
+def _is_simple_capture(fs: FieldSpec) -> bool:
+    """True when the capture's matched text IS the field value (a plain
+    string assignment): no sub-captures, no value-dependent validation and
+    no value conversion."""
+    node = fs.node
+    return (
+        fs.sub is None
+        and not _needs_walker(node.ptype, node.params)
+        and "format" not in node.params
+        and "maxval" not in node.params
+        and node.ptype != "v2-iptables"
+    )
+
+
 @dataclass
 class ExtractPlan:
-    """Per-rule extraction metadata for a trie cohort match."""
+    """Per-rule extraction metadata for one match pattern: a trie cohort's
+    (one plan per rule marker) or the rule's own (the matcher's sole-rule
+    fold).  Holds exactly what the matcher's row kernel reads per row,
+    precomputed once: the spec lists reversed (the leftmost parser attaches
+    last and wins on duplicate names, bottom-up fixJSON, src/pdag.c:1584),
+    simple captures resolved to INTEGER group indices (m.group(int) skips
+    the name lookup), and the rule's attributes flattened (cr.rule_id is a
+    property, cr.rule.* a 2-hop chain; both measurable at 20k+ matched rows
+    per batch)."""
 
     cr: "CompiledRule"
-    specs: list  # FieldSpecs along the rule's trie path (shared groups)
-    simple: list  # [(gname, name)] fast-path captures
+    specs_rev: tuple  # FieldSpecs along the rule's pattern path
+    simple_rev: tuple  # ((group index, name), ...) plain-string captures
     has_complex: bool
+    rule_id: int
+    extra_fields: dict
+    rule: Rule
 
     @classmethod
-    def build(cls, cr, specs):
-        simple = []
-        has_complex = False
-        for fs in specs:
-            node = fs.node
-            if (
-                fs.sub is None
-                and not _needs_walker(node.ptype, node.params)
-                and "format" not in node.params
-                and "maxval" not in node.params
-                and node.ptype != "v2-iptables"
-            ):
-                simple.append((fs.gname, fs.name))
-            else:
-                has_complex = True
-        return cls(cr=cr, specs=specs, simple=simple, has_complex=has_complex)
+    def build(cls, cr, specs, pattern: re.Pattern):
+        gidx = pattern.groupindex
+        simple = [(gidx[fs.gname], fs.name) for fs in specs if _is_simple_capture(fs)]
+        return cls(cr=cr, specs_rev=tuple(reversed(specs)),
+                   simple_rev=tuple(reversed(simple)),
+                   has_complex=len(simple) < len(specs), rule_id=cr.rule_id,
+                   extra_fields=cr.extra_fields, rule=cr.rule)
 
 
 class _TrieNode:
@@ -510,14 +511,14 @@ class MatchCohort:
                 node = child
             node.terminals.append(cr)
 
-        plans: dict[int, ExtractPlan] = {}  # marker name order -> plan
+        path_of: dict = {}  # marker name order -> (rule, specs on its path)
         path_specs: list = []
 
         def emit(node: _TrieNode) -> str:
             parts = []
             if node.terminals:
                 cr = node.terminals[0]  # duplicates coalesce: first wins
-                plans[cr.order] = ExtractPlan.build(cr, list(path_specs))
+                path_of[cr.order] = (cr, list(path_specs))
                 parts.append(f"(?P<R{cr.order}>)")
             for child in sorted(node.children.values(), key=lambda c: (_edge_key(c.item)[0], c.ins)):
                 # compact single-child unnamed-literal chains (the PDAG's
@@ -559,21 +560,9 @@ class MatchCohort:
             )
         self.pattern = re.compile(pattern_src)
         self.by_marker = {
-            self.pattern.groupindex[f"R{order}"]: plan for order, plan in plans.items()
+            self.pattern.groupindex[f"R{order}"]: ExtractPlan.build(cr, specs, self.pattern)
+            for order, (cr, specs) in path_of.items()
         }
-        # precomputed per-plan extraction tuples for the matcher hot loop:
-        # reversed once here (not per row), and simple captures resolved to
-        # INTEGER group indices (m.group(int) skips the name lookup)
-        gidx = self.pattern.groupindex
-        for plan in plans.values():
-            plan.simple_rev = tuple((gidx[g], nm) for g, nm in reversed(plan.simple))
-            plan.specs_rev = tuple(reversed(plan.specs))
-            # flatten the per-row property/attribute chains out of the
-            # matcher hot loop (cr.rule_id is a property; cr.rule.* is a
-            # 2-hop chain — both measurable at 20k+ matched rows per batch)
-            plan.rule_id = plan.cr.rule_id
-            plan.extra_fields = plan.cr.extra_fields
-            plan.rule = plan.cr.rule
         return self
 
     def plan_for(self, m: re.Match):

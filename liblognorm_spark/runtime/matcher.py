@@ -4,44 +4,64 @@ Execution model (the Spark-first replacement for the reference's per-message
 ``ln_normalize`` loop, src/lognormalizer.c:213-267):
 
 * The rulebase is compiled once on the driver (:func:`compile_rulebase`)
-  and shipped to executors inside the ``mapInPandas`` closure — the
-  broadcast-once / read-many design of the reference's immutable PDAG
-  (doc/pdag_implementation_model.rst:117-123).
-* Matching runs per Arrow batch: ONE anchored fullmatch per row against
-  each trie-factored cohort pattern (prefix sharing + priority branch
-  order, the PDAG discipline); the matched rule is identified by its
-  marker group via ``lastindex`` and extraction runs only on confirmed
-  matches (two-stage detect-then-extract, same shape as the reference's
-  stage-one/stage-two parsers, src/parser.c:2276-2318).
-* Rows whose regex match fails value-dependent validation (Reject) and
-  rows matching no cohort fall back to the exact-semantics walker over a
-  prefix-indexed candidate set, which also produces the
-  ``unparsed-data`` longest-parse diagnostics.
+  and shipped to executors inside the match stage's ``pandas_udf``
+  closure — the broadcast-once / read-many design of the reference's
+  immutable PDAG (doc/pdag_implementation_model.rst:117-123).
+* Matching runs per Arrow batch (:func:`match_batch`) as named stages, in
+  this order:
 
-No per-row Python crosses the Spark API surface: the entry points are a
-struct-returning scalar pandas_udf (``normalize_df``) and
-``mapInPandas`` over Arrow record batches.
+  1. route (:func:`_route`): factorize the rows' 16-char prefixes, then
+     one memoized dispatch + fold lookup per distinct prefix;
+  2. sole-rule fold (:func:`_fold_stage`): rows whose prefix proves a
+     single candidate rule match that rule's own pattern;
+  3. cohort fullmatch (:func:`_cohort_stage`): ONE anchored fullmatch per
+     row against each prefix-compatible trie-factored cohort pattern
+     (prefix sharing + priority branch order, the PDAG discipline); the
+     matched rule is identified by its marker group via ``lastindex``;
+  4. walker-only rules (:func:`_walker_rule_stage`), interleaved with
+     stage 3 in rule priority order;
+  5. walker fallback (:func:`_fallback_stage`): rows whose regex match
+     failed value-dependent validation (Reject) and rows matching nothing
+     take the exact-semantics walker over a prefix-indexed candidate set,
+     which also produces the ``unparsed-data`` longest-parse diagnostics;
+  6. frame assembly (:func:`_frame`).
+
+  Stages 2 and 3 share one row kernel (:func:`_match_rows`): a fold is a
+  one-rule cohort with a fixed extraction plan.  Extraction runs only on
+  confirmed matches (two-stage detect-then-extract, same shape as the
+  reference's stage-one/stage-two parsers, src/parser.c:2276-2318).
+
+No per-row Python crosses the Spark API surface: the entry point is a
+struct-returning scalar pandas_udf (``normalize_df``) over Arrow batches.
 """
 
 from __future__ import annotations
 
 import bisect
 import json as _json
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 
 from liblognorm_spark.compiler.compiler import (
     CompiledRulebase,
+    ExtractPlan,
+    MatchCohort,
     _NOT_PART,
     compile_rulebase,
 )
 from liblognorm_spark.compiler.motifs import Reject
 from liblognorm_spark.rulebase.loader import Rulebase
-from liblognorm_spark.runtime.walker import attach, normalize_message
+from liblognorm_spark.runtime.walker import (
+    WalkState,
+    attach,
+    flat_items,
+    normalize_message,
+    walk_flat,
+    walk_seq,
+)
 
-# output schema of the match stage (DDL form for mapInPandas)
+# normalize_df's match-result columns, in output order (DDL form)
 MATCH_FIELDS_DDL = (
     "rule_id int, tags array<string>, fields_json string, "
     "unparsed_data string, originalmsg string, parsed_to int, "
@@ -49,50 +69,16 @@ MATCH_FIELDS_DDL = (
 )
 
 
-def _finalize_event(crb: CompiledRulebase, cr, ev: dict) -> dict:
-    """Add event.tags + tag-driven annotations (src/pdag.c:1664-1671,
-    annot.c:214-239) — precomputed per rule at compile time."""
-    if cr.extra_fields:
-        ev.update(cr.extra_fields)
-    return ev
-
-
-def _rule_meta(crb: CompiledRulebase):
-    """Three per-rule maps (rule_id -> tags list / rb_file / rb_line),
-    each with the -1 unmatched default.  Kept as THREE separate maps on
-    purpose: a combined rule_id -> (tags, file, line) map with a zip(*)
-    transpose at the call site was tried and measured ~13% slower on
-    matched-heavy batches (see match_batch), so the three-pass rebuild is
-    the faster layout.  The tags list is ONE shared object per rule —
-    consumers only ever read it; building a fresh list per matched row was
-    a measurable cost on matched-heavy batches.  Cached on the rulebase."""
-    maps = getattr(crb, "_rule_meta_cache", None)
-    if maps is None:
-        tmap = {-1: None}
-        fmap = {-1: None}
-        lmap = {-1: 0}
-        for cr in crb.rules:
-            tmap[cr.rule_id] = list(cr.tags)
-            fmap[cr.rule_id] = cr.rule.rb_file
-            lmap[cr.rule_id] = cr.rule.rb_line
-        maps = crb._rule_meta_cache = (tmap, fmap, lmap)
-    return maps
-
-
 def _dumps_std(ev: dict) -> str:
     return _json.dumps(ev, ensure_ascii=False, separators=(",", ":"))
 
 
 try:  # orjson: ~5x faster serialization, same utf-8 output
-    import orjson as _orjson
-
-    # bound method for the hot loop's inlined call (the wrapper-function
-    # call itself was measurable at matched-heavy batches)
-    _ORJSON_DUMPS = _orjson.dumps
+    from orjson import dumps as _orjson_dumps
 
     def _dumps(ev: dict) -> str:
         try:
-            return _ORJSON_DUMPS(ev).decode()
+            return _orjson_dumps(ev).decode()
         except TypeError:
             # orjson rejects surrogate-escaped strings (undecodable input
             # bytes round-tripped via errors='surrogateescape'); the
@@ -100,7 +86,6 @@ try:  # orjson: ~5x faster serialization, same utf-8 output
             return _dumps_std(ev)
 
 except ImportError:  # pragma: no cover
-    _ORJSON_DUMPS = None
     _dumps = _dumps_std
 
 
@@ -179,7 +164,6 @@ def _cohort_dispatch(crb: CompiledRulebase):
     cached = getattr(crb, "_dispatch", None)
     if cached is not None:
         return cached
-    from liblognorm_spark.compiler.compiler import MatchCohort
     from liblognorm_spark.rulebase.loader import PNode
 
     root: dict = {}
@@ -277,7 +261,8 @@ def _fold_index(crb: CompiledRulebase):
 def _fold_entry(crb: CompiledRulebase, u: str):
     """If the dispatch prefix `u` PROVES (by literal-prefix analysis over
     the whole rulebase) that exactly one rule can match any text starting
-    with `u`, return a prepared sole-rule fast-path entry; else None.
+    with `u`, return that rule's own ExtractPlan (over its own pattern);
+    else None.
 
     Soundness: a rule is counted compatible with `u` when its literal
     prefix is a prefix of `u` (motifs could match anything after it) or
@@ -316,34 +301,13 @@ def _fold_entry(crb: CompiledRulebase, u: str):
     cr = cands[0]
     if cr.pattern is None:
         return None  # walker-only sole rule: keep the exact walker path
-    # the entry tail is per-RULE, not per-prefix: cache it so the many
-    # prefixes that map to one rule (sshd[1], sshd[2], ... with a 16+ char
-    # dispatch window) build it once
-    ent = getattr(cr, "_fold_ent", None)
-    if ent is None:
-        gi = cr.pattern.groupindex
-        simple_rev = tuple((gi[g], nm) for g, nm in reversed(cr.simple_specs))
-        # constant-JSON tail: extra_fields (tags + annotations) are per-rule
-        # constants serialized identically on every matched row.  When the
-        # rule is simple (flat string captures only — parsed keys are
-        # exactly the spec names) and no extra key collides with a parsed
-        # field name, the serialized tail can be byte-concatenated after
-        # the parsed fields instead of dict-updated + reserialized per row.
-        # Key ORDER in the output is unchanged: parsed fields first, then
-        # extras — same as the ev.update() path.
-        tail = None
-        if _ORJSON_DUMPS is not None and cr.extra_fields and not cr.complex_specs:
-            names = {nm for _, nm in cr.simple_specs}
-            if names.isdisjoint(cr.extra_fields):
-                try:
-                    tail = b"," + _ORJSON_DUMPS(cr.extra_fields)[1:]
-                except TypeError:
-                    tail = None
-        ent = cr._fold_ent = (
-            cr.pattern.fullmatch, simple_rev, tuple(reversed(cr.specs)),
-            bool(cr.complex_specs), cr.extra_fields, cr.rule_id, cr.rule,
-            tail)
-    return ent
+    # the plan is per-RULE, not per-prefix: cache it so the many prefixes
+    # that map to one rule (sshd[1], sshd[2], ... with a 16+ char dispatch
+    # window) build it once
+    plan = getattr(cr, "_fold_ent", None)
+    if plan is None:
+        plan = cr._fold_ent = ExtractPlan.build(cr, cr.specs, cr.pattern)
+    return plan
 
 
 def _exec_path_of(crb: CompiledRulebase, rule) -> str:
@@ -383,49 +347,39 @@ def _exec_path_of(crb: CompiledRulebase, rule) -> str:
     return s
 
 
-def match_batch(crb: CompiledRulebase, texts: pd.Series,
-                add_rule_location: bool = False,
-                add_originalmsg: bool = False,
-                add_rule_mockup: bool = False,
-                add_exec_path: bool = False) -> pd.DataFrame:
-    """Normalize a batch of messages.  Returns a DataFrame with
-    MATCH_FIELDS_DDL columns, index-aligned positionally with `texts`.
+class _Batch:
+    """Per-call state the match stages share: the texts, the output
+    columns (plain lists: scalar assignment is ~3x cheaper than numpy
+    setitem) and the row masks."""
 
-    `add_rule_location` mirrors LN_CTXOPT_ADD_RULE_LOCATION
-    (src/pdag.c:1254-1263: metadata.rule.location {file,line});
-    `add_originalmsg` mirrors LN_CTXOPT_ADD_ORIGINALMSG
-    (src/pdag.c:1672-1677); `add_rule_mockup` mirrors LN_CTXOPT_ADD_RULE
-    (src/pdag.c:1246-1251: metadata.rule.mockup, the matched rule's
-    template)."""
-    n = len(texts)
-    tvals = texts.to_numpy(dtype=object)
-    # plain lists: scalar assignment is ~3x cheaper than numpy setitem.
-    # tags/rb_file/rb_line are per-rule CONSTANTS — they are not stored per
-    # row in the hot loop but reconstructed at the end from rule_id via one
-    # C-level map() pass per column.
-    rule_id: list = [-1] * n
-    fields_json: list = [None] * n
-    unparsed: list = [None] * n
-    originalmsg: list = [None] * n
-    parsed_to: list = [0] * n
+    def __init__(self, crb: CompiledRulebase, texts: pd.Series, decorate):
+        n = len(texts)
+        self.crb = crb
+        self.texts = texts
+        self.tvals = texts.to_numpy(dtype=object)
+        self.decorate = decorate  # None on the no-options (Spark) path
+        self.rule_id: list = [-1] * n
+        self.fields_json: list = [None] * n
+        self.unparsed: list = [None] * n
+        self.originalmsg: list = [None] * n
+        self.parsed_to: list = [0] * n
+        # rows no stage has settled yet; rows whose regex match failed
+        # value-dependent validation go to the walker instead
+        self.remaining = texts.notna().to_numpy().copy()
+        self.need_walker = np.zeros(n, dtype=bool)
 
-    notna = texts.notna().to_numpy()
-    remaining = notna.copy()
-    need_walker = np.zeros(n, dtype=bool)
-    types = crb.types
-    annots = crb.annotations
 
-    from liblognorm_spark.compiler.compiler import MatchCohort
-    from liblognorm_spark.runtime.walker import (
-        WalkState,
-        flat_items,
-        walk_flat,
-        walk_seq,
-    )
+def _decorator(crb: CompiledRulebase, add_rule_location: bool,
+               add_originalmsg: bool, add_rule_mockup: bool,
+               add_exec_path: bool):
+    """Option-driven event decoration, ONE definition for every stage that
+    records a match so they can never drift apart; None when no option is
+    set, so the no-options hot path skips the call entirely."""
+    if not (add_originalmsg or add_rule_location or add_rule_mockup
+            or add_exec_path):
+        return None
 
-    def _decorate(ev, rule, t):
-        """Shared option-driven event decoration — ONE definition so the
-        fast path and the walker fallback can never drift apart."""
+    def decorate(ev: dict, rule, t: str) -> None:
         if add_originalmsg:
             ev["originalmsg"] = t
         if add_rule_location or add_rule_mockup or add_exec_path:
@@ -441,315 +395,217 @@ def match_batch(crb: CompiledRulebase, texts: pd.Series,
                 meta["exec-path"] = _exec_path_of(crb, rule)
             ev["metadata"] = meta
 
-    # per-row decoration is option-gated; the no-options hot path skips the
-    # _decorate call entirely
-    decorate_needed = (add_originalmsg or add_rule_location or add_rule_mockup
-                       or add_exec_path)
+    return decorate
 
-    def _record(pos, cr, ev, t):
-        if cr.extra_fields:
-            ev.update(cr.extra_fields)
-        if decorate_needed:
-            _decorate(ev, cr.rule, t)
-        rule_id[pos] = cr.rule_id
-        fields_json[pos] = _dumps(ev)
-        parsed_to[pos] = len(t)
-        remaining[pos] = False
 
-    # (A whole-batch pre-pass consulting the unmatched-row memo was tried
-    # and removed: it pays a dict get for EVERY row to save only the
-    # repeated-unmatched rows' master-regex fails — break-even at ~23%
-    # repeat-unmatched share, a net loss on typical streams where
-    # unparsed rows are <5%.  The memo stays consulted in the fallback
-    # loop, where only previously-unmatched rows pay for it.)
+def _route(b: _Batch):
+    """Stage 1: send each row to the sole-rule fold or to its
+    prefix-compatible cohorts, instead of scanning every cohort pattern.
 
-    # route rows to prefix-compatible cohorts instead of scanning every
-    # cohort pattern sequentially.  The dispatch result depends only on the
-    # first _DISPATCH_MAX_DEPTH chars, and log streams repeat those heavily
-    # (program/host prefixes), so the trie descends once per DISTINCT
-    # prefix (factorize groups rows C-side) — and only on first sight: the
-    # per-prefix cohort tuple is memoized across batches (bounded), making
-    # steady-state dispatch pure dict hits.
-    dispatch, wild_cohorts = _cohort_dispatch(crb)
+    The dispatch result depends only on the first _DISPATCH_MAX_DEPTH
+    chars, and log streams repeat those heavily (program/host prefixes),
+    so the lookup runs once per DISTINCT prefix (factorize groups rows
+    C-side), and the trie descends only on first sight: the per-prefix
+    (cohort ids, fold plan | None) value is memoized across batches
+    (bounded), making steady-state dispatch pure dict hits.  Rows are then
+    grouped by destination with ONE vectorized argsort (per-prefix chunk
+    lists cost ~15% of batch time at 8192 rules in thousands of tiny
+    np.concatenate calls).
+
+    Returns ([(fold plan, row list)], {cohort id: [row arrays]}); rows
+    with no candidate cohort appear in neither and reach the fallback."""
+    crb = b.crb
+    folds: list = []
+    cohort_rows: dict = {}
+    rows = np.flatnonzero(b.remaining)
+    if not len(rows):
+        return folds, cohort_rows
+    dispatch, _ = _cohort_dispatch(crb)
     dmemo = _dispatch_memo(crb)
     dmemo_get = dmemo.get
-    # single-cohort rows (the overwhelmingly common case) are routed by ONE
-    # vectorized argsort over a per-row cohort-id array — at 8192 rules the
-    # old per-unique chunk lists cost ~15% of batch time in thousands of
-    # tiny np.concatenate calls.  Uniques dispatching to >1 cohort keep the
-    # chunk-list path (cand_multi).
-    cand_arr: dict[int, np.ndarray] = {}
-    cand_multi: dict[int, list] = {}
-    fold_uniques: list = []
-    notna_idx = np.flatnonzero(remaining)
-    if len(notna_idx):
-        keys = np.array([t[:_DISPATCH_MAX_DEPTH] for t in tvals[notna_idx]],
-                        dtype=object)
-        codes, uniques = pd.factorize(keys)
-        dmemo_room = _DISPATCH_MEMO_MAX - len(dmemo)
-        if len(uniques) <= 64:
-            # few distinct prefixes (tiny rulebase or homogeneous batch):
-            # the chunk-list path's handful of np.concatenate calls is
-            # cheaper than the vectorized argsort's fixed overhead
-            order = np.argsort(codes, kind="stable")
-            sorted_idx = notna_idx[order]
-            counts = np.bincount(codes, minlength=len(uniques))
-            start = 0
-            for k, cnt in enumerate(counts.tolist()):
-                chunk = sorted_idx[start:start + cnt]
-                start += cnt
-                u = uniques[k]
-                ent = dmemo_get(u)
-                if ent is None:
-                    if dmemo_room > 0:
-                        # the fold entry is only worth BUILDING when it
-                        # will be memoized: un-cached, its construction
-                        # cost dwarfs the ~2-row payoff
-                        ent = (tuple(dispatch(u)), _fold_entry(crb, u))
-                        dmemo[u] = ent
-                        dmemo_room -= 1
-                    else:
-                        ent = (tuple(dispatch(u)), None)
-                # the small-prefix-count path skips the sole-rule fold:
-                # with <=64 uniques the cohort chunk lists amortize fine
-                for ci in ent[0]:
-                    cand_multi.setdefault(ci, []).append(chunk)
-        else:
-            ucids = np.empty(len(uniques), dtype=np.int64)
-            multi_uniques: list = []
-            fold_uniques: list = []
-            for k, u in enumerate(uniques.tolist()):
-                ent = dmemo_get(u)
-                if ent is None:
-                    if dmemo_room > 0:
-                        ent = (tuple(dispatch(u)), _fold_entry(crb, u))
-                        dmemo[u] = ent
-                        dmemo_room -= 1
-                    else:
-                        ent = (tuple(dispatch(u)), None)
-                cis, fold = ent
-                if fold is not None:
-                    ucids[k] = -3  # sole-rule fast path, rows taken below
-                    fold_uniques.append((k, fold))
-                elif len(cis) == 1:
-                    ucids[k] = cis[0]
-                elif not cis:
-                    ucids[k] = -1  # no candidate cohort: straight to fallback
-                else:
-                    ucids[k] = -2
-                    multi_uniques.append((k, cis))
-            if len(fold_uniques) < len(uniques):
-                row_cid = ucids[codes]
-                order = np.argsort(row_cid, kind="stable")
-                rc_sorted = row_cid[order]
-                rows_sorted = notna_idx[order]
-                cids_present, seg_starts = np.unique(rc_sorted, return_index=True)
-                seg_ends = np.append(seg_starts[1:], len(rc_sorted))
-                for cid, s, e in zip(cids_present.tolist(), seg_starts.tolist(),
-                                     seg_ends.tolist()):
-                    if cid >= 0:
-                        cand_arr[cid] = rows_sorted[s:e]
-            # (every unique folded -> no cohort-routing argsort needed)
-            if multi_uniques or fold_uniques:
-                order_c = np.argsort(codes, kind="stable")
-                sorted_idx = notna_idx[order_c]
-                # ONE bulk tolist: the fold loop slices this plain list per
-                # unique (C-level, ~2-3 rows each) — per-unique numpy
-                # slice+tolist cost ~6% of batch time at 8192 prefixes
-                rows_by_code = sorted_idx.tolist()
-                counts = np.bincount(codes, minlength=len(uniques))
-                starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-                counts_l = counts.tolist()
-                starts_l = starts.tolist()
-                for k, cis in multi_uniques:
-                    chunk = sorted_idx[starts[k]:starts[k] + counts[k]]
-                    for ci in cis:
-                        cand_multi.setdefault(ci, []).append(chunk)
-
-    # sole-rule fast path: rows whose dispatch prefix proves a single
-    # candidate rule match that rule's OWN pattern directly — same
-    # extraction semantics as the cohort body below, minus the cohort
-    # trie's alternation over rules the prefix already ruled out.  A miss
-    # here is definitive (the one compatible rule failed), so the row
-    # falls through to the unmatched-diagnostics path like any other
-    # regex miss; Reject still routes to the exact walker.
-    if fold_uniques:
-        dumps = _dumps
-        odumps = _ORJSON_DUMPS
-        not_part = _NOT_PART
-        attach_ = attach
-        done_here: list = []
-        done_add = done_here.append
-        for k, ent in fold_uniques:
-            (ffullmatch, fsimple_rev, fspecs_rev, fhas_complex,
-             fextra, frid, frule, ftail) = ent
-            # the tail shortcut changes key ORDER if decoration inserts
-            # keys after extras; decoration is off on the Spark hot path
-            use_tail = ftail is not None and not decorate_needed
-            s = starts_l[k]
-            for pos in rows_by_code[s:s + counts_l[k]]:
-                t = tvals[pos]
-                m = ffullmatch(t)
-                if m is None:
-                    continue
-                try:
-                    ev: dict = {}
-                    if fhas_complex:
-                        for fs in fspecs_rev:
-                            v = fs.extract(m, t, types)
-                            if v is not_part:
-                                continue
-                            attach_(ev, fs.name, v)
-                    else:
-                        group = m.group
-                        for gi, name in fsimple_rev:
-                            v = group(gi)
-                            if v is not None:
-                                ev[name] = v
-                except Reject:
-                    need_walker[pos] = True
-                    done_add(pos)
-                    continue
-                if use_tail and ev:
-                    try:
-                        fields_json[pos] = (odumps(ev)[:-1] + ftail).decode()
-                    except TypeError:
-                        ev.update(fextra)
-                        fields_json[pos] = _dumps_std(ev)
-                    rule_id[pos] = frid
-                    parsed_to[pos] = len(t)
-                    done_add(pos)
-                    continue
-                if fextra:
-                    ev.update(fextra)
-                if decorate_needed:
-                    _decorate(ev, frule, t)
-                rule_id[pos] = frid
-                if odumps is not None:
-                    try:
-                        fields_json[pos] = odumps(ev).decode()
-                    except TypeError:
-                        fields_json[pos] = _dumps_std(ev)
-                else:
-                    fields_json[pos] = dumps(ev)
-                parsed_to[pos] = len(t)
-                done_add(pos)
-        if done_here:
-            remaining[done_here] = False
-
-    for ci, cohort in enumerate(crb.cohorts):
-        if not remaining.any():
-            break
-        if isinstance(cohort, MatchCohort):
-            if ci in wild_cohorts:
-                idxs = np.flatnonzero(remaining).tolist()
+    room = _DISPATCH_MEMO_MAX - len(dmemo)
+    keys = np.array([t[:_DISPATCH_MAX_DEPTH] for t in b.tvals[rows]], dtype=object)
+    codes, uniques = pd.factorize(keys)
+    # one destination per distinct fold plan / cohort-id tuple
+    targets: list = []  # ExtractPlan | tuple(cohort ids)
+    slot_of: dict = {}  # id(plan) | cohort-id tuple -> index in targets
+    uslot = np.empty(len(uniques), dtype=np.int64)
+    for k, u in enumerate(uniques.tolist()):
+        ent = dmemo_get(u)
+        if ent is None:
+            if room > 0:
+                # the fold plan is only worth looking up when it will be
+                # memoized: un-cached, the lookup dwarfs the ~2-row payoff
+                ent = dmemo[u] = (tuple(dispatch(u)), _fold_entry(crb, u))
+                room -= 1
             else:
-                arr = cand_arr.get(ci)
-                parts = cand_multi.get(ci)
-                if parts:
-                    arr = (np.concatenate([arr] + parts) if arr is not None
-                           else np.concatenate(parts))
-                elif arr is None:
-                    continue
-                # tolist(): the row loop below indexes python lists per row,
-                # and np.int64 positions pay a conversion on every access
-                idxs = arr[remaining[arr]].tolist()
-            # one anchored fullmatch per row against the trie-factored
-            # pattern for the whole cohort; the record is inlined (the
-            # _record call itself was measurable at matched-heavy batches)
-            fullmatch = cohort.pattern.fullmatch
-            plan_for = cohort.plan_for
-            marker_get = cohort.by_marker.get
-            # per-row constants hoisted to locals (global/attribute lookups
-            # cost real time at 20k+ rows per batch)
-            dumps = _dumps
-            odumps = _ORJSON_DUMPS
-            not_part = _NOT_PART
-            attach_ = attach
-            # numpy bool setitem per row is measurable; batch the flips
-            # (correct because a pos appears at most once per cohort's idxs,
-            # and `remaining` is only read again by LATER cohorts)
-            done_here: list = []
-            done_add = done_here.append
-            for pos in idxs:
-                t = tvals[pos]
-                m = fullmatch(t)
-                if m is None:
-                    continue
-                # lastindex IS the rule marker in the common case; plan_for
-                # keeps the safety-net scan for exotic matches
-                plan = marker_get(m.lastindex) or plan_for(m)
-                try:
-                    ev: dict = {}
-                    # *_rev: leftmost parser attaches last and wins on
-                    # duplicate names (bottom-up fixJSON, src/pdag.c:1584)
-                    if plan.has_complex:
-                        for fs in plan.specs_rev:
-                            v = fs.extract(m, t, types)
-                            if v is not_part:
-                                continue
-                            attach_(ev, fs.name, v)
-                    else:  # fast path: all captures are plain strings
-                        # (a single m.group(*ids) call was tried and is
-                        # ~30% slower than per-group calls: the argument
-                        # unpacking + result tuple cost more than the
-                        # extra C calls)
-                        group = m.group
-                        for gi, name in plan.simple_rev:
-                            v = group(gi)
-                            if v is not None:
-                                ev[name] = v
-                except Reject:
-                    need_walker[pos] = True
-                    done_add(pos)
-                    continue
-                if plan.extra_fields:
-                    ev.update(plan.extra_fields)
-                if decorate_needed:
-                    _decorate(ev, plan.rule, t)
-                rule_id[pos] = plan.rule_id
-                # inlined _dumps (the wrapper call cost ~0.3us/row)
-                if odumps is not None:
-                    try:
-                        fields_json[pos] = odumps(ev).decode()
-                    except TypeError:
-                        fields_json[pos] = _dumps_std(ev)
-                else:
-                    fields_json[pos] = dumps(ev)
-                parsed_to[pos] = len(t)
-                done_add(pos)
-            if done_here:
-                remaining[done_here] = False
+                ent = (tuple(dispatch(u)), None)
+        cis, fold = ent
+        key = cis if fold is None else id(fold)
+        slot = slot_of.get(key)
+        if slot is None:
+            slot = slot_of[key] = len(targets)
+            targets.append(cis if fold is None else fold)
+        uslot[k] = slot
+    row_slot = uslot[codes]
+    rows_sorted = rows[np.argsort(row_slot, kind="stable")]
+    ends = np.cumsum(np.bincount(row_slot, minlength=len(targets))).tolist()
+    start = 0
+    for target, end in zip(targets, ends):
+        seg = rows_sorted[start:end]
+        start = end
+        if isinstance(target, tuple):
+            for ci in target:
+                cohort_rows.setdefault(ci, []).append(seg)
         else:
-            cr = cohort  # walker-only rule: exact per-row match
-            if cr.prefilter:
-                pref = texts.str.startswith(cr.prefilter, na=False).to_numpy()
-                idxs = np.flatnonzero(remaining & pref).tolist()
-            else:
-                idxs = np.flatnonzero(remaining).tolist()
-            flat = flat_items(cr.rule)
-            for pos in idxs:
-                t = tvals[pos]
-                st = WalkState(text=t, strlen=len(t), types=types)
-                ev = {}
-                ok = (walk_flat(st, flat, ev) if flat is not None
-                      else walk_seq(st, cr.rule.seq, 0, 0, False, ev, None))
-                if ok:
-                    _record(pos, cr, ev, t)
+            # tolist(): the kernel indexes python lists per row, and
+            # np.int64 positions pay a conversion on every access
+            folds.append((target, seg.tolist()))
+    return folds, cohort_rows
 
-    # slow path: unmatched rows + validation rejects -> exact walker over
-    # the prefix-index candidate set (rules whose leading literal can
-    # possibly match); the pruned rules' partial-literal parsedTo credit is
-    # carried over from the trie descent depth
+
+def _match_rows(b: _Batch, rows: list, fixed_plan: ExtractPlan | None,
+                cohort: MatchCohort | None) -> None:
+    """The row kernel of stages 2 and 3: per row ONE anchored fullmatch,
+    then extract the fields, encode and record.  A sole-rule fold passes
+    its rule's plan (a one-rule cohort with a fixed plan, matched by the
+    rule's own pattern); a cohort passes itself, and each match's plan
+    comes from its marker group."""
+    if fixed_plan is not None:
+        fullmatch = fixed_plan.cr.pattern.fullmatch
+    else:
+        fullmatch = cohort.pattern.fullmatch
+        marker_get = cohort.by_marker.get
+        plan_for = cohort.plan_for
+    # per-row constants hoisted to locals (global/attribute lookups cost
+    # real time at 20k+ rows per batch)
+    tvals = b.tvals
+    types = b.crb.types
+    rule_id, fields_json, parsed_to = b.rule_id, b.fields_json, b.parsed_to
+    need_walker = b.need_walker
+    decorate = b.decorate
+    dumps = _dumps
+    not_part = _NOT_PART
+    attach_ = attach
+    # numpy bool setitem per row is measurable; batch the flips (correct
+    # because a pos appears at most once in `rows`, and `remaining` is only
+    # read again by LATER stages)
+    done: list = []
+    done_add = done.append
+    for pos in rows:
+        t = tvals[pos]
+        m = fullmatch(t)
+        if m is None:
+            continue
+        # lastindex IS the rule marker in the common case; plan_for keeps
+        # the safety-net scan for exotic matches
+        plan = fixed_plan or marker_get(m.lastindex) or plan_for(m)
+        try:
+            ev: dict = {}
+            if plan.has_complex:
+                for fs in plan.specs_rev:
+                    v = fs.extract(m, t, types)
+                    if v is not_part:
+                        continue
+                    attach_(ev, fs.name, v)
+            else:  # fast path: all captures are plain strings
+                # (a single m.group(*ids) call was tried and is ~30% slower
+                # than per-group calls: the argument unpacking + result
+                # tuple cost more than the extra C calls)
+                group = m.group
+                for gi, name in plan.simple_rev:
+                    v = group(gi)
+                    if v is not None:
+                        ev[name] = v
+        except Reject:
+            need_walker[pos] = True
+            done_add(pos)
+            continue
+        if plan.extra_fields:
+            ev.update(plan.extra_fields)
+        if decorate is not None:
+            decorate(ev, plan.rule, t)
+        rule_id[pos] = plan.rule_id
+        fields_json[pos] = dumps(ev)
+        parsed_to[pos] = len(t)
+        done_add(pos)
+    if done:
+        b.remaining[done] = False
+
+
+def _fold_stage(b: _Batch, folds: list) -> None:
+    """Stage 2: rows whose dispatch prefix proves a single candidate rule
+    match that rule's OWN pattern directly — the cohort semantics minus the
+    cohort trie's alternation over rules the prefix already ruled out.  A
+    miss here is definitive (the one compatible rule failed), so the row
+    falls through to the unmatched diagnostics like any other regex miss;
+    Reject still routes to the exact walker."""
+    for plan, rows in folds:
+        _match_rows(b, rows, plan, None)
+
+
+def _cohort_stage(b: _Batch, cohort: MatchCohort, parts: list | None,
+                  wild: bool) -> None:
+    """Stage 3, one cohort: its routed rows (all unsettled rows for a
+    wildcard cohort, one holding a rule without a plain leading literal)
+    that no earlier stage settled."""
+    if wild:
+        rows = np.flatnonzero(b.remaining).tolist()
+    elif parts:
+        arr = parts[0] if len(parts) == 1 else np.concatenate(parts)
+        rows = arr[b.remaining[arr]].tolist()
+    else:
+        return
+    _match_rows(b, rows, None, cohort)
+
+
+def _walker_rule_stage(b: _Batch, cr) -> None:
+    """Stage 4, one walker-only rule: exact per-row walk over the unsettled
+    rows its literal prefix admits."""
+    if cr.prefilter:
+        pref = b.texts.str.startswith(cr.prefilter, na=False).to_numpy()
+        rows = np.flatnonzero(b.remaining & pref).tolist()
+    else:
+        rows = np.flatnonzero(b.remaining).tolist()
+    types = b.crb.types
+    flat = flat_items(cr.rule)
+    for pos in rows:
+        t = b.tvals[pos]
+        st = WalkState(text=t, strlen=len(t), types=types)
+        ev: dict = {}
+        ok = (walk_flat(st, flat, ev) if flat is not None
+              else walk_seq(st, cr.rule.seq, 0, 0, False, ev, None))
+        if ok:
+            if cr.extra_fields:
+                ev.update(cr.extra_fields)
+            if b.decorate is not None:
+                b.decorate(ev, cr.rule, t)
+            b.rule_id[pos] = cr.rule_id
+            b.fields_json[pos] = _dumps(ev)
+            b.parsed_to[pos] = len(t)
+            b.remaining[pos] = False
+
+
+def _fallback_stage(b: _Batch) -> None:
+    """Stage 5: unmatched rows + validation rejects -> exact walker over
+    the prefix-index candidate set (rules whose leading literal can
+    possibly match); the pruned rules' partial-literal parsedTo credit is
+    carried over from the trie descent depth.
+
+    Memoized by FULL text: the result is a pure function of the text (same
+    rulebase), and log streams repeat unparsed lines heavily — a malformed
+    heartbeat repeats for hours — so identical rows pay one dict hit
+    instead of a re-walk.  The no-options path (the Spark hot path) keeps
+    the memo across batches on the compiled rulebase, size-capped;
+    option-bearing calls memoize per batch (the options change the emitted
+    event).  (A whole-batch pre-pass consulting this memo was tried and
+    removed: it pays a dict get for EVERY row to save only the
+    repeated-unmatched rows' regex fails — break-even at ~23% repeat-
+    unmatched share, a net loss on typical streams where unparsed rows are
+    <5%.)"""
+    crb = b.crb
     index = _fallback_index(crb)
-    # memoized by FULL text: the result is a pure function of the text
-    # (same rulebase), and log streams repeat unparsed lines heavily — a
-    # malformed heartbeat repeats for hours — so identical rows pay one
-    # dict hit instead of a re-walk.  The no-options path (the Spark hot
-    # path) keeps the memo across batches on the compiled rulebase, size-
-    # capped; option-bearing calls memoize per batch (the options change
-    # the emitted event).
-    if decorate_needed:
+    if b.decorate is not None:
         fb_memo: dict = {}
         fb_bytes = 0
     else:
@@ -759,8 +615,8 @@ def match_batch(crb: CompiledRulebase, texts: pd.Series,
             crb._fb_memo_bytes = 0
         fb_bytes = crb._fb_memo_bytes
     fb_room = _FB_MEMO_MAX - len(fb_memo)
-    for pos in np.flatnonzero(remaining | need_walker).tolist():
-        t = tvals[pos]
+    for pos in np.flatnonzero(b.remaining | b.need_walker).tolist():
+        t = b.tvals[pos]
         res = fb_memo.get(t)
         if res is None:
             cand_rules, lit_credit = index(t)
@@ -771,40 +627,69 @@ def match_batch(crb: CompiledRulebase, texts: pd.Series,
             if rule is None:
                 res = (-1, _dumps(ev), ev["unparsed-data"], ev["originalmsg"], pto)
             else:
-                if decorate_needed:
-                    _decorate(ev, rule, t)
+                if b.decorate is not None:
+                    b.decorate(ev, rule, t)
                 res = (rule.rule_id, _dumps(ev), None, None, pto)
             if fb_room > 0 and fb_bytes + len(t) <= _FB_MEMO_MAX_BYTES:
                 fb_memo[t] = res
                 fb_room -= 1
                 fb_bytes += len(t)
         rid, fj, up, om, pto = res
-        parsed_to[pos] = pto
-        fields_json[pos] = fj
+        b.parsed_to[pos] = pto
+        b.fields_json[pos] = fj
         if rid >= 0:
-            rule_id[pos] = rid
+            b.rule_id[pos] = rid
         else:
-            unparsed[pos] = up
-            originalmsg[pos] = om
-    if not decorate_needed:
+            b.unparsed[pos] = up
+            b.originalmsg[pos] = om
+    if b.decorate is None:
         crb._fb_memo_bytes = fb_bytes
 
-    # per-rule constant columns, one C-level map() pass each (rule_id -1 ->
-    # the unmatched defaults; a single combined-map pass + zip transpose
-    # was tried and measured ~13% slower than three map passes)
-    tmap, fmap, lmap = _rule_meta(crb)
+
+def _frame(b: _Batch) -> pd.DataFrame:
+    """Stage 6: the per-row result columns."""
     return pd.DataFrame(
         {
-            "rule_id": pd.array(rule_id, dtype="int32"),
-            "tags": list(map(tmap.__getitem__, rule_id)),
-            "fields_json": fields_json,
-            "unparsed_data": unparsed,
-            "originalmsg": originalmsg,
-            "parsed_to": pd.array(parsed_to, dtype="int32"),
-            "rb_file": list(map(fmap.__getitem__, rule_id)),
-            "rb_line": pd.array(list(map(lmap.__getitem__, rule_id)), dtype="int32"),
+            "rule_id": pd.array(b.rule_id, dtype="int32"),
+            "fields_json": b.fields_json,
+            "unparsed_data": b.unparsed,
+            "originalmsg": b.originalmsg,
+            "parsed_to": pd.array(b.parsed_to, dtype="int32"),
         }
     )
+
+
+def match_batch(crb: CompiledRulebase, texts: pd.Series,
+                add_rule_location: bool = False,
+                add_originalmsg: bool = False,
+                add_rule_mockup: bool = False,
+                add_exec_path: bool = False) -> pd.DataFrame:
+    """Normalize a batch of messages.  Returns a DataFrame with the per-row
+    columns rule_id, fields_json, unparsed_data, originalmsg and parsed_to,
+    index-aligned positionally with `texts` (the per-rule constants tags,
+    rb_file and rb_line follow from rule_id; normalize_df adds them).
+
+    `add_rule_location` mirrors LN_CTXOPT_ADD_RULE_LOCATION
+    (src/pdag.c:1254-1263: metadata.rule.location {file,line});
+    `add_originalmsg` mirrors LN_CTXOPT_ADD_ORIGINALMSG
+    (src/pdag.c:1672-1677); `add_rule_mockup` mirrors LN_CTXOPT_ADD_RULE
+    (src/pdag.c:1246-1251: metadata.rule.mockup, the matched rule's
+    template)."""
+    b = _Batch(crb, texts, _decorator(crb, add_rule_location, add_originalmsg,
+                                      add_rule_mockup, add_exec_path))
+    folds, cohort_rows = _route(b)
+    _fold_stage(b, folds)
+    _, wild_cohorts = _cohort_dispatch(crb)
+    # stages 3 and 4 run in rule priority order: first match wins
+    for ci, cohort in enumerate(crb.cohorts):
+        if not b.remaining.any():
+            break
+        if isinstance(cohort, MatchCohort):
+            _cohort_stage(b, cohort, cohort_rows.get(ci), ci in wild_cohorts)
+        else:
+            _walker_rule_stage(b, cohort)
+    _fallback_stage(b)
+    return _frame(b)
 
 
 def normalize_strings(rb: Rulebase | CompiledRulebase, lines: list[str]) -> list[dict]:
@@ -842,7 +727,7 @@ def normalize_df(df, rb: Rulebase | CompiledRulebase, text_col: str = "text"):
 
     @F.pandas_udf(struct_ddl)
     def _match(s: pd.Series) -> pd.DataFrame:
-        return match_batch(crb, s).drop(columns=["tags", "rb_file", "rb_line", "originalmsg"])
+        return match_batch(crb, s).drop(columns="originalmsg")
 
     out = (
         df.withColumn("_m", _match(F.col(text_col)))
@@ -876,24 +761,6 @@ def normalize_df(df, rb: Rulebase | CompiledRulebase, text_col: str = "text"):
             .withColumn("rb_line", F.lit(None).cast("int"))
         )
     # canonical column order is part of the API: input columns first, then
-    # the MATCH_FIELDS_DDL order — identical to normalize_df_mapinpandas,
-    # so positional consumers can switch between the two implementations
+    # the MATCH_FIELDS_DDL order
     match_cols = [p.split()[0] for p in MATCH_FIELDS_DDL.split(", ")]
     return out.select(*df.columns, *match_cols)
-
-
-def normalize_df_mapinpandas(df, rb: Rulebase | CompiledRulebase, text_col: str = "text"):
-    """mapInPandas variant (kept for the CLI/streaming paths where the
-    whole batch is needed Python-side anyway)."""
-    crb = rb if isinstance(rb, CompiledRulebase) else compile_rulebase(rb)
-    in_schema = df.schema
-    out_ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema.fields)
-    schema = out_ddl + ", " + MATCH_FIELDS_DDL
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            res = match_batch(crb, pdf[text_col])
-            res.index = pdf.index
-            yield pd.concat([pdf, res], axis=1)
-
-    return df.mapInPandas(fn, schema=schema)

@@ -5,6 +5,18 @@ from __future__ import annotations
 import os
 
 
+def _default_driver_memory() -> str:
+    """About half the host's physical RAM, capped at 64g: the JVM heap
+    plus its off-heap and the Python workers must fit in RAM, or the
+    kernel's OOM killer ends the JVM mid-job (a 64g heap on a 15 GB host
+    grew to ~15.9 GB RSS and was killed)."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):  # no sysconf (non-POSIX)
+        return "64g"
+    return f"{max(1, min(64, (phys // 2) >> 30))}g"
+
+
 def get_spark(app: str = "liblognorm_spark", cpus: int | None = None, shuffle_partitions: int | None = None):
     from pyspark.sql import SparkSession
 
@@ -32,7 +44,8 @@ def get_spark(app: str = "liblognorm_spark", cpus: int | None = None, shuffle_pa
         # local mode = driver-only: the driver heap is the executor heap.
         # GC pressure is the first scaling killer for the match stage at
         # high core counts (measured: 8g heap halves 32-core throughput).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "64g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()))
         .config("spark.ui.enabled", "false")
         # CPU-heavy Python match stage: smaller input splits (vs the 128MB
         # scan default) give 3-4 tasks per core, smoothing stragglers and

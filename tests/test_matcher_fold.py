@@ -120,3 +120,58 @@ def test_prefilter_longer_than_dispatch_window():
     folded_long = [u for u, v in crb._dispatch_memo_cache.items()
                    if u.startswith("L") and v[1] is not None]
     assert not folded_long  # shared window prefix -> ambiguous -> no fold
+
+
+def test_routed_path_equals_walker():
+    # the Spark traffic shape: a many-rule syslog rulebase and a batch with
+    # more distinct prefixes than one cohort holds, so rows take the
+    # vectorized routing, the sole-rule fold (with a Reject), the cohort
+    # fullmatch and the walker stages; every row must agree with the exact
+    # walker
+    import json
+    import random
+
+    from liblognorm_spark.runtime.walker import normalize_message
+
+    tags = ("auth", "cron", "daemon", "kern", "mail", "user")
+    rb = ("version=2\n"
+          + "".join(f"rule={tags[i % 6]},p{i}:prog{i}[%pid:number%]: "
+                    "action %act:word% from %ip:ipv4%\n" for i in range(128))
+          + "annotate=auth:+sev=\"hi\"\n"
+          "rule=auth:sshd[%pid:number%]: accepted %u:word%\n"
+          "rule=auth:sshd[%pid:number%]: failed %u:word%\n"
+          "rule=cap:cap[%pid:number{\"maxval\":100}%] from %ip:ipv4%\n"
+          "rule=r:wonly %n{\"parser\":{\"name\":\"x\",\"type\":\"number\"},"
+          "\"while\":{\"type\":\"literal\",\"text\":\":\"},"
+          "\"option.permitMismatchInParser\":true}:repeat%\n")
+    rng = random.Random(5)
+    texts, misses, rejects = [], 0, 0
+    for j in range(2000):
+        head = f"prog{rng.randrange(128)}[{rng.randrange(1000, 1004)}]: action go from "
+        if rng.random() < 0.2:  # near-miss: the rule's prefix, invalid IPv4
+            texts.append(head + f"10.0.{j % 250}.{256 + j}")
+            misses += 1
+        else:
+            texts.append(head + f"10.0.{j % 250}.{j % 200}")
+    for pid in (7, 700, 8, 800):  # maxval 100: 700/800 validate -> Reject
+        texts.append(f"cap[{pid}] from 10.1.1.1")
+        rejects += pid > 100
+    for j in range(40):  # shared prefix: no sole rule, cohort fullmatch
+        texts.append(f"sshd[{j}]: {('accepted', 'failed')[j % 2]} u{j}")
+    texts += ["wonly 4", "wonly 12"]
+    assert len({t[:M._DISPATCH_MAX_DEPTH] for t in texts}) > 64
+
+    crb = compile_rulebase(Rulebase.from_string(rb))
+    s = pd.Series(texts, dtype=object)
+    first = M.match_batch(crb, s)
+    assert any(v[1] is not None for v in crb._dispatch_memo_cache.values())
+    for i, t in enumerate(texts):
+        rule, ev, _ = normalize_message(crb.ordered_rules, t, crb.types,
+                                        crb.annotations)
+        fr, wr = int(first["rule_id"][i]), (rule.rule_id if rule else -1)
+        assert fr == wr, f"{t!r} fast={fr} walker={wr}"
+        if wr >= 0:
+            assert json.loads(first["fields_json"][i]) == ev, t
+    # every planted near-miss and Reject row ends unparsed, nothing else
+    assert int(first["unparsed_data"].notna().sum()) == misses + rejects
+    pd.testing.assert_frame_equal(first, M.match_batch(crb, s))

@@ -80,7 +80,7 @@ def main():
         for _ in range(3):
             # drop ALL cross-batch memo state: the dispatch memo, the
             # fallback memo, the fold index, and each rule's prepared
-            # fold entry (the dispatch TRIE itself is deliberately kept —
+            # fold plan (the dispatch TRIE itself is deliberately kept —
             # it is built once per compile, not per stream).  Before
             # round 6 the fold state survived, so the cold column partly
             # amortized round-5 fold work and over-credited the memo.
