@@ -606,16 +606,16 @@ def _query_vec(spark, sf_dir):
 def q_knn_cosine(spark, sf_dir):
     # the cosine against the literal query is built as ONE SQL string
     # (64 F.lit py4j calls cost ~0.2s of driver time per invocation);
-    # cos_const_sql is the exact same fold with the query norm as a
-    # driver constant, so cos_millis is bit-identical
-    from liblognorm_spark.functions.similarity import cos_const_sql
+    # cos_sql folds in the query norm as a driver constant, which is the
+    # same double the SQL fold computes, so cos_millis is bit-identical
+    from liblognorm_spark.functions.similarity import cos_sql
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     qv = _query_vec(spark, sf_dir)
     scored = emb.select(
         "vec_id",
         F.expr(
-            f"cast(floor({cos_const_sql('`embedding`', qv)} * 1000) as long)"
+            f"cast(floor({cos_sql('`embedding`', qv, len(qv))} * 1000) as long)"
         ).alias("cos_millis"),
     )
     return scored.orderBy(F.col("cos_millis").desc(), F.col("vec_id")).limit(10)
@@ -1299,8 +1299,9 @@ def _plane_literal(plane: list[float]) -> str:
 
 def _dot_sql(vec: str, plane: list[float]) -> str:
     """Fold-left dot product against literal plane coefficients — exact twin
-    of similarity.bucket_from_planes (F.aggregate folds left from 0.0;
-    list_reduce folds left from the first element; 0.0 + v == v)."""
+    of the per-plane dot in similarity.bucket_sql (the Spark side folds
+    left from 0.0; list_reduce folds left from the first element;
+    0.0 + v == v)."""
     dim = len(plane)
     return (
         f"list_reduce(list_transform(range(1, {dim + 1}), "

@@ -34,13 +34,16 @@ Spark-first shape, designed for 100 TB:
   (the dedup._cap_buckets discipline) so one degenerate centroid can
   never turn the equi-join quadratic at corpus scale.
 - Literal-heavy expressions (k x dim centroid constants, the per-plane
-  dot folds) are built as ONE SQL string handed to ``F.expr`` instead of
-  thousands of per-element ``F.lit``/py4j round-trips: the round-6
-  measurement showed ~1-1.5 s of pure driver-side Python per Lloyd
-  iteration in expression CONSTRUCTION alone (guide §1.2 — fix the
-  per-task work, where the "task" here is the driver).  The SQL parses
-  to the exact same fold (zip_with + aggregate, left fold from 0.0), so
-  every value is unchanged.
+  dots) are built by similarity's one vector builder as ONE SQL string
+  handed to ``F.expr`` instead of thousands of per-element
+  ``F.lit``/py4j round-trips: the round-6 measurement showed ~1-1.5 s
+  of pure driver-side Python per Lloyd iteration in expression
+  CONSTRUCTION alone (guide §1.2 — fix the per-task work, where the
+  "task" here is the driver).  The centroid dots keep the interpreted
+  fold (zip_with + aggregate, left fold from 0.0) because their literals
+  change every iteration; the literal-free row norms and pair dots are
+  unrolled for codegen.  Both forms give bit-identical values
+  (similarity.dot_sql).
 
 Every value that leaves these operators is integral (ids, cluster ids,
 counts, micro-scaled cosines), so the DuckDB oracles compare exactly.
@@ -48,11 +51,9 @@ counts, micro-scaled cosines), so the DuckDB oracles compare exactly.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import functions as F
 
-from liblognorm_spark.functions.similarity import _sql_f
+from liblognorm_spark.functions.similarity import _fold, _qcol, cos_sql, norm_sql
 
 #: fixed-point scale for order-independent centroid sums
 CENTROID_SCALE = 1 << 24
@@ -65,100 +66,31 @@ CENTROID_SCALE = 1 << 24
 DEFAULT_MAX_CLUSTER = 32768
 
 
-def _lit_vec(values):
-    return F.array(*[F.lit(float(v)) for v in values])
-
-
-def _norm_sql(vec_sql: str, dim: int) -> str:
-    """Unrolled codegen norm — see similarity._norm_const_sql."""
-    from liblognorm_spark.functions.similarity import _norm_const_sql
-
-    return _norm_const_sql(vec_sql, dim)
-
-
-def _cos_arr_sql(vec_sql: str, centroids, norm_sql: str | None = None) -> str:
-    """array(cos(vec, c0), ..., cos(vec, ck-1)) as ONE SQL string, each
-    centroid's norm folded in as a driver-computed constant (same values
-    as the round-5 _cos_to_literal: Python's sum() folds left from 0 like
-    the SQL aggregate, math.sqrt is IEEE).  ``norm_sql`` names an
-    already-computed per-row norm column so the row norm is evaluated
-    once instead of once per centroid."""
-    from liblognorm_spark.functions.similarity import _dot_fold_sql
-
-    dim = len(centroids[0])
-    nv = norm_sql if norm_sql is not None else _norm_sql(vec_sql, dim)
-    # centroid dots keep the FOLD form: the centroid literals change
-    # every Lloyd iteration, so an unrolled k x dim tree is re-analyzed/
-    # re-compiled on every plan — measured +3.5 s per semdedup call at
-    # fixture scale in an interleaved A/B (fold 2.5 s vs unrolled 6.0 s),
-    # and a k=64 array costs ~40 s of compile per plan.  The unrolled
-    # codegen win is kept where the generated source is STABLE (the
-    # literal-free pair dots below and the per-element sums), which is
-    # also where the per-row volume lives at corpus scale.
-    dot = _dot_fold_sql
-    parts = []
-    for cent in centroids:
-        cn = math.sqrt(sum(float(v) * float(v) for v in cent))
-        if cn == 0.0:
-            parts.append("cast(0.0 as double)")
-            continue
-        parts.append(
-            f"(CASE WHEN {nv} = cast(0.0 as double) THEN cast(0.0 as double) "
-            f"ELSE {dot(vec_sql, cent)} / ({nv} * {_sql_f(cn)}) END)"
-        )
-    return "array(" + ", ".join(parts) + ")"
-
-
-_ASSIGN_FROM_COS = "cast(array_position({c}, array_max({c})) - 1 as int)"
-
-
-def _cos_to_literal(vec, cent):
-    """cosine(vec, literal centroid) with the centroid's norm folded in
-    as a driver-computed constant — half the per-row work and half the
-    codegen expression size of cosine_expr(vec, lit(cent)).  Bit-parity
-    with the oracle's in-SQL norm is exact: Python's sum() folds left
-    from 0 like list_reduce (0.0 + x == x) and math.sqrt is IEEE."""
-    from liblognorm_spark.functions.similarity import dot_expr, norm_expr
-
-    cn = math.sqrt(sum(v * v for v in cent))
-    d = dot_expr(vec, _lit_vec(cent))
-    nv = norm_expr(vec)
-    if cn == 0.0:
-        return F.lit(0.0)
-    return F.when(nv == 0, F.lit(0.0)).otherwise(d / (nv * F.lit(cn)))
-
-
-def assign_expr(vec, centroids):
-    """Cluster id (0-based) of `vec` against literal `centroids`:
-    argmax cosine, ties to the lowest cluster index (array_position
+def _assign(df, vec_col: str, centroids, out):
+    """``out`` columns + ``cluster`` (0-based): argmax cosine against the
+    literal centroids, ties to the lowest cluster index (array_position
     returns the FIRST occurrence of the max — DuckDB's list_position
     behaves identically).
 
-    Column-API form, kept for callers holding an arbitrary Column; the
-    operators below build the same expression as one SQL string
-    (F.expr) because per-element F.lit construction costs ~3 ms of py4j
-    per literal — seconds per Lloyd iteration at k x dim = 512."""
-    cosines = F.array(*[_cos_to_literal(vec, c) for c in centroids])
-    return (F.array_position(cosines, F.array_max(cosines)) - 1).cast("int")
-
-
-def _q(col: str) -> str:
-    return f"`{col}`"
-
-
-def _with_cluster(df, vec_col: str, centroids, out=None):
-    """df + ``cluster`` column via the SQL-string assignment.  Staged
-    projections: the row norm is a column (computed once, read by all k
-    cosines), then the cosine array is a column (read twice by
-    array_position/array_max) — the single-expression form re-evaluated
-    both."""
-    keep = df.columns if out is None else out
+    Staged projections: the row norm is a column ``_nrm`` (computed once,
+    read by all k cosines — k=8 inlines 16 norm copies per row, larger k
+    would explode the generated code quadratically), then the cosine
+    array is a column (read twice by array_position/array_max) — the
+    single-expression form re-evaluated both.  Each centroid's norm is a
+    driver-side constant, and the centroid dots always keep the FOLD
+    form: the literals change every Lloyd iteration (see
+    similarity._fold), and a k=64 unrolled array costs ~40 s of compile
+    per plan."""
     dim = len(centroids[0])
-    cos = _cos_arr_sql(_q(vec_col), centroids, norm_sql="_lls_nrm")
+    v = _qcol(vec_col)
+    fold = _fold(len(centroids) * dim, per_plan=True)
+    cos = "array(" + ", ".join(
+        cos_sql(v, cent, dim, na="_nrm", fold=fold) for cent in centroids) + ")"
     return (
-        df.withColumn("_lls_nrm", F.expr(_norm_sql(_q(vec_col), dim)))
+        df.withColumn("_nrm", F.expr(norm_sql(v, dim)))
         .withColumn("_lls_cos", F.expr(cos))
-        .select(*keep, F.expr(_ASSIGN_FROM_COS.format(c="_lls_cos")).alias("cluster"))
+        .select(*out, F.expr("cast(array_position(_lls_cos, array_max(_lls_cos)) - 1 "
+                             "as int)").alias("cluster"))
     )
 
 
@@ -183,23 +115,11 @@ def kmeans_fit(emb_df, k: int = 8, iters: int = 2,
     # cast(floor(cast(v[d] as double) * 2^24 + 0.5) as long), summed.
     scale = f"{float(CENTROID_SCALE)!r}D"
     sums_sql = "array(" + ", ".join(
-        f"sum(cast(floor(cast({_q(vec_col)}[{d}] as double) * {scale} + 0.5D) "
+        f"sum(cast(floor(cast({_qcol(vec_col)}[{d}] as double) * {scale} + 0.5D) "
         "as long))" for d in range(dim)) + ")"
 
     for _ in range(iters):
-        # norm as a real column first: the k cosines then READ it (k=8
-        # inlines 16 norm copies per row; larger k would explode the
-        # generated code quadratically)
-        scaled = (
-            df.select(F.col(vec_col),
-                      F.expr(_norm_sql(_q(vec_col), dim)).alias("_nrm"))
-            .withColumn("_lls_cos", F.expr(_cos_arr_sql(_q(vec_col), cents,
-                                                        norm_sql="_nrm")))
-            .select(
-                F.expr(_ASSIGN_FROM_COS.format(c="_lls_cos")).alias("cluster"),
-                F.col(vec_col),
-            )
-        )
+        scaled = _assign(df, vec_col, cents, [vec_col])
         sums = scaled.groupBy("cluster").agg(
             F.count("*").alias("cnt"), F.expr(sums_sql).alias("s")
         ).collect()
@@ -223,10 +143,8 @@ def kmeans_assign(emb_df, k: int = 8, iters: int = 2,
     fit).  Pure projection over the scan: no join, no shuffle."""
     if centroids is None:
         centroids = kmeans_fit(emb_df, k, iters, vec_col, id_col)
-    return _with_cluster(
-        emb_df.where(F.col(vec_col).isNotNull()), vec_col, centroids,
-        out=[id_col],
-    )
+    return _assign(emb_df.where(F.col(vec_col).isNotNull()), vec_col, centroids,
+                   [id_col])
 
 
 def cluster_sizes(emb_df, k: int = 8, iters: int = 2,
@@ -274,17 +192,7 @@ def semdedup(emb_df, k: int = 8, iters: int = 2, threshold: float = 0.9,
         centroids = kmeans_fit(emb_df, k, iters, vec_col, id_col)
     dim = len(centroids[0])
     base = _spread(emb_df.where(F.col(vec_col).isNotNull()))
-    # norm column first, then cosines READ it (one norm fold per row,
-    # not one per centroid per row), then the assignment reads the
-    # cosine array column
-    assigned = (
-        base.select(F.col(id_col), F.col(vec_col),
-                    F.expr(_norm_sql(_q(vec_col), dim)).alias("_nrm"))
-        .withColumn("_lls_cos", F.expr(_cos_arr_sql(_q(vec_col), centroids,
-                                                    norm_sql="_nrm")))
-        .select(id_col, vec_col, "_nrm",
-                F.expr(_ASSIGN_FROM_COS.format(c="_lls_cos")).alias("cluster"))
-    )
+    assigned = _assign(base, vec_col, centroids, [id_col, vec_col, "_nrm"])
     # persist BEFORE the cap so the cap's hot-cluster aggregate and both
     # join sides read the cached assignment instead of re-evaluating the
     # k x dim cosine folds (the minhash path had exactly this
@@ -304,17 +212,11 @@ def semdedup(emb_df, k: int = 8, iters: int = 2, threshold: float = 0.9,
         F.col(vec_col).alias("vb"),
         F.col("_nrm").alias("nb"),
     )
-    from liblognorm_spark.functions.similarity import _dot_pair_sql
-
-    # same value as cosine_expr(va, vb): the norms are the identical
-    # IEEE folds, computed once per row instead of once per pair, and
-    # the per-pair dot is the unrolled codegen chain (the interpreted
-    # zip_with fold dominated the within-cluster join at scale)
-    cos = F.when(
-        (F.col("na") == 0) | (F.col("nb") == 0), F.lit(0.0)
-    ).otherwise(
-        F.expr(_dot_pair_sql("`va`", "`vb`", dim)) / (F.col("na") * F.col("nb"))
-    )
+    # the norms are the assignment's columns, computed once per row
+    # instead of once per pair; the per-pair dot is the unrolled codegen
+    # chain (the interpreted zip_with fold dominated the within-cluster
+    # join at scale)
+    cos = F.expr(cos_sql("`va`", "`vb`", dim, na="`na`", nb="`nb`"))
     pairs = (
         a.join(b, "cluster")
         .where(F.col("id_a") < F.col("id_b"))

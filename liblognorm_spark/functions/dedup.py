@@ -417,19 +417,12 @@ def embedding_near_dups(emb_df, vec_col: str = "embedding", id_col: str = "vec_i
     With one table of t planes the capture probability for a pair at angle
     θ is (1-θ/π)^t — hopeless for moderate similarity; L tables raise it to
     1-(1-p^t)^L, which is the same banding trick MinHash-LSH uses.  ``dim``
-    must equal the embedding length: hyperplanes are literal arrays, and a
-    length mismatch would null the dot products (zip_with null-pads)."""
-    from liblognorm_spark.functions.similarity import (
-        _hyperplanes,
-        _table_structs_sql,
-    )
+    must equal the embedding length: hyperplanes are literal arrays of
+    ``dim`` coefficients and the dots read exactly ``dim`` elements."""
+    from liblognorm_spark.functions.similarity import _bucket_rows, _table_planes, cos_sql
 
-    planes = _hyperplanes(dim, ntables * nplanes)
-    tables = [planes[t * nplanes:(t + 1) * nplanes] for t in range(ntables)]
-    keyed = emb_df.select(
-        F.col(id_col), F.col(vec_col),
-        F.explode(F.expr(_table_structs_sql(f"`{vec_col}`", tables))).alias("tb"),
-    ).select(id_col, vec_col, "tb.tbl", "tb.bkt")
+    tables = _table_planes(dim, nplanes, ntables)
+    keyed = _bucket_rows(emb_df, vec_col, tables, [id_col, vec_col])
     if max_bucket_size is not None:
         keyed = _cap_buckets(keyed, ["tbl", "bkt"], max_bucket_size)
     keyed = _persist(keyed)  # self-join reuses the bucketing
@@ -445,9 +438,7 @@ def embedding_near_dups(emb_df, vec_col: str = "embedding", id_col: str = "vec_i
         )
         .dropDuplicates(["id_a", "id_b"])  # dedup across tables BEFORE the cosine
     )
-    from liblognorm_spark.functions.similarity import cos_pair_sql
-
-    cos = F.expr(f"cast({cos_pair_sql('`_va`', '`_vb`', dim)} * 1000 as long)")
+    cos = F.expr(f"cast({cos_sql('`_va`', '`_vb`', dim)} * 1000 as long)")
     return pairs.select(
         "id_a", "id_b", cos.alias("cos_millis")
     ).where(F.col("cos_millis") >= min_cos_millis)

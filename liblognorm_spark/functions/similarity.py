@@ -1,7 +1,7 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k is the exact baseline (JVM-side zip_with/aggregate
-— no Python in the hot path); the LSH-bucketed variant is the scale path:
+Brute-force cosine top-k is the exact baseline (JVM-side arithmetic — no
+Python in the hot path); the LSH-bucketed variant is the scale path:
 at 100 TB the bucket join prunes candidates to O(rows/2^nplanes) per
 bucket.  build_ann_index() persists the bucketing as a partition column so
 queries prune at SCAN time (partition pruning, no per-query bucket
@@ -9,27 +9,23 @@ computation over the corpus).
 
 All arithmetic is double-precision with explicit element casts and
 sequential (fold-left) summation, so the DuckDB oracles — which use
-list_reduce over ::DOUBLE[] — produce bit-identical values.
+list_reduce over ::DOUBLE[] — produce bit-identical values.  Every dot,
+norm and cosine is built by one builder (:func:`dot_sql`,
+:func:`norm_sql`, :func:`cos_sql`) as ONE SQL string, with the
+fold-or-unroll choice made in :func:`_fold`.
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
+from itertools import combinations
 
 from pyspark.sql import functions as F
 
 #: lsh_topk_batch_adaptive collects the query frame for driver-side probe
 #: planning; this bounds that collect (~50k queries x 64 doubles ≈ 26 MB)
 MAX_ADAPTIVE_BATCH_QUERIES = 50_000
-
-
-def dot_expr(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
 
 
 def _sql_f(v: float) -> str:
@@ -48,102 +44,112 @@ def _sql_f(v: float) -> str:
 UNROLL_MAX_TERMS = 2048
 
 
-def _dot_fold_sql(vec_sql: str, values) -> str:
-    """Fold form of the literal dot (interpreted HOF; used above
-    UNROLL_MAX_TERMS where unrolled codegen compilation dominates)."""
-    arr = "array(" + ", ".join(_sql_f(v) for v in values) + ")"
+def _fold(terms: int, per_plan: bool = False) -> bool:
+    """The one fold-or-unroll decision for every vector expression built
+    here.  ``terms`` counts the multiply-adds of the whole expression
+    tree handed to one F.expr — callers that combine MANY dots into one
+    tree (multi-table bucket structs, OR-chained probe filters) pass the
+    total: the round-6 measurement found a single 4096-term tree costs
+    minutes of compile/interpreted fallback while the same values via
+    the fold run in seconds.
+
+    ``per_plan`` marks literals that change on every plan — the k-means
+    centroids — which always fold: an unrolled k x dim tree would be
+    re-analyzed and re-compiled on every Lloyd iteration (measured +3.5 s
+    per semdedup call at fixture scale in an interleaved A/B, fold 2.5 s
+    vs unrolled 6.0 s).  The unrolled codegen win is kept where the
+    generated source is STABLE, which is also where the per-row volume
+    lives at corpus scale."""
+    return per_plan or terms > UNROLL_MAX_TERMS
+
+
+def _products(a: str, b, dim: int) -> str:
+    """``(a[0]*b[0]) + (a[1]*b[1]) + ...`` as one left-associative chain;
+    ``b`` is a vector column's SQL or a list of literal coefficients."""
+    if isinstance(b, str):
+        return " + ".join(
+            f"(cast({a}[{i}] as double) * cast({b}[{i}] as double))"
+            for i in range(dim))
+    return " + ".join(
+        f"(cast({a}[{i}] as double) * {_sql_f(b[i])})" for i in range(dim))
+
+
+def dot_sql(a: str, b, dim: int, fold: bool | None = None) -> str:
+    """Dot product of the vector column ``a`` with ``b`` — another vector
+    column's SQL, or a list of ``dim`` literal coefficients — as one SQL
+    string.  ``fold`` picks the form (None: :func:`_fold` on this dot
+    alone):
+
+    - the FOLD, aggregate(zip_with(a, b, x*y), 0.0, acc + v), is a
+      HigherOrderFunction, which Spark always interprets;
+    - the UNROLLED chain (a[0]*b[0]) + (a[1]*b[1]) + ... is plain
+      Add/Multiply/GetArrayItem and runs inside whole-stage CODEGEN.
+      Measured on the 200k-vector tier this is the difference between
+      minutes and seconds for every cosine-shaped operator.
+
+    The two are bit-identical for dim-length vectors: a left-assoc `+`
+    chain adds in exactly the fold's order, and 0.0 + x == x for every x
+    the downstream integer scaling can distinguish.  Requires
+    len(vec) == dim: the fold null-padded a longer vector to NULL, the
+    unrolled chain only reads the first dim elements — every caller
+    already pins dim."""
+    if fold is None:
+        fold = _fold(dim)
+    if not fold:
+        return f"({_products(a, b, dim)})"
+    arr = b if isinstance(b, str) else "array(" + ", ".join(_sql_f(v) for v in b) + ")"
     return (
-        f"aggregate(zip_with({vec_sql}, {arr}, "
+        f"aggregate(zip_with({a}, {arr}, "
         "(x, y) -> cast(x as double) * cast(y as double)), "
         "cast(0.0 as double), (acc, v) -> acc + v)"
     )
 
 
-def _dot_const_sql(vec_sql: str, values) -> str:
-    """Dot of a vector column against literal coefficients, as an
-    UNROLLED left-associative sum: (v[0]*c0) + (v[1]*c1) + ...
-
-    Bit-identical to dot_expr(vec, lit_vec(values)) — a left-assoc `+`
-    chain adds in exactly the fold's order, and 0.0 + x == x for every
-    x the downstream integer scaling can distinguish — but, unlike the
-    aggregate/zip_with HigherOrderFunction (which Spark always
-    interprets), plain Add/Multiply/GetArrayItem chains run inside
-    whole-stage CODEGEN.  Measured on the 200k-vector tier this is the
-    difference between minutes and seconds for every cosine-shaped
-    operator.  Requires len(vec) == len(values): the fold null-padded a
-    longer vector to NULL, the unrolled chain only reads the first
-    len(values) elements — every caller already pins dim."""
-    return "(" + " + ".join(
-        f"(cast({vec_sql}[{i}] as double) * {_sql_f(v)})"
-        for i, v in enumerate(values)
-    ) + ")"
+def norm_sql(a: str, dim: int, fold: bool | None = None) -> str:
+    """Euclidean norm of a vector column: the sqrt of its self-dot, in the
+    same two forms as :func:`dot_sql` (squares are never -0.0, so even the
+    signed-zero corner agrees).  Same pinned-dim contract: an unrolled
+    norm of a vector SHORTER than dim (including an empty array) reads
+    out-of-range elements — callers must filter/validate vector length
+    upstream, as every operator here documents."""
+    if fold is None:
+        fold = _fold(dim)
+    if fold:
+        return f"sqrt({dot_sql(a, a, dim, fold=True)})"
+    return f"sqrt({_products(a, a, dim)})"
 
 
-def _norm_const_sql(vec_sql: str, dim: int) -> str:
-    """Euclidean norm of a vector column, unrolled like _dot_const_sql
-    (bit-identical to norm_expr for dim-length vectors; squares are
-    never -0.0 so even the signed-zero corner agrees).  Same pinned-dim
-    contract: a vector SHORTER than dim (including an empty array) reads
-    out-of-range elements as NULL and the norm becomes NULL, where the
-    fold form returned the partial sum (and 0.0 for empty) — callers
-    must filter/validate vector length upstream, as every operator here
-    documents."""
-    sq = " + ".join(
-        f"(cast({vec_sql}[{i}] as double) * cast({vec_sql}[{i}] as double))"
-        for i in range(dim)
-    )
-    return f"sqrt({sq})"
+def cos_sql(a: str, b, dim: int, na: str | None = None, nb: str | None = None,
+            fold: bool | None = None) -> str:
+    """Cosine of the vector column ``a`` with ``b`` (a column's SQL or a
+    list of literal coefficients); 0.0 when either norm is zero.
 
-
-def _dot_pair_sql(a_sql: str, b_sql: str, dim: int) -> str:
-    """Unrolled dot of two vector COLUMNS (codegen; bit-identical to
-    dot_expr's fold for dim-length vectors)."""
-    return "(" + " + ".join(
-        f"(cast({a_sql}[{i}] as double) * cast({b_sql}[{i}] as double))"
-        for i in range(dim)
-    ) + ")"
-
-
-def cos_pair_sql(a_sql: str, b_sql: str, dim: int) -> str:
-    """Unrolled twin of cosine_expr(a, b) for dim-length vectors."""
-    na = _norm_const_sql(a_sql, dim)
-    nb = _norm_const_sql(b_sql, dim)
+    ``na``/``nb`` name already-computed norm columns, so a row's norm is
+    evaluated once instead of inside every cosine that reads it; a
+    column side without one gets its norm inline from :func:`norm_sql`.
+    A literal side's norm is a driver-side constant: Python's sum() folds
+    left from 0 exactly like the SQL aggregate and math.sqrt is IEEE, so
+    it is the same double and the quotient is bit-identical (a zero-norm
+    literal makes the whole cosine the constant 0.0)."""
+    inline_norms = (na is None) + (isinstance(b, str) and nb is None)
+    if fold is None:  # the CASE reads each inline norm twice
+        fold = _fold(dim * (1 + 2 * inline_norms))
+    if na is None:
+        na = norm_sql(a, dim, fold)
+    if isinstance(b, str):
+        if nb is None:
+            nb = norm_sql(b, dim, fold)
+        zero = f"({na} = cast(0.0 as double)) OR ({nb} = cast(0.0 as double))"
+    else:
+        bn = math.sqrt(sum(float(v) * float(v) for v in b))
+        if bn == 0.0:
+            return "cast(0.0 as double)"
+        nb = _sql_f(bn)
+        zero = f"{na} = cast(0.0 as double)"
     return (
-        f"(CASE WHEN ({na} = cast(0.0 as double)) OR ({nb} = cast(0.0 as double)) "
-        f"THEN cast(0.0 as double) "
-        f"ELSE {_dot_pair_sql(a_sql, b_sql, dim)} / ({na} * {nb}) END)"
+        f"(CASE WHEN {zero} THEN cast(0.0 as double) "
+        f"ELSE {dot_sql(a, b, dim, fold)} / ({na} * {nb}) END)"
     )
-
-
-def cos_const_sql(vec_sql: str, query_vec) -> str:
-    """SQL twin of cosine_expr(vec, lit(query_vec)) with the query norm
-    folded in driver-side: Python's sum() folds left from 0 exactly like
-    the SQL aggregate and math.sqrt is IEEE, so norm(q) is the same
-    double and the quotient is bit-identical."""
-    qn = math.sqrt(sum(float(v) * float(v) for v in query_vec))
-    if qn == 0.0:
-        return "cast(0.0 as double)"
-    nv = _norm_const_sql(vec_sql, len(query_vec))
-    return (
-        f"(CASE WHEN {nv} = cast(0.0 as double) THEN cast(0.0 as double) "
-        f"ELSE {_dot_const_sql(vec_sql, query_vec)} / ({nv} * {_sql_f(qn)}) END)"
-    )
-
-
-def norm_expr(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def cosine_expr(a, b):
-    d = dot_expr(a, b)
-    na, nb = norm_expr(a), norm_expr(b)
-    return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(d / (na * nb))
 
 
 def _hyperplanes(dim: int, nplanes: int, seed: str = "lls-hp"):
@@ -161,42 +167,21 @@ def _hyperplanes(dim: int, nplanes: int, seed: str = "lls-hp"):
     return planes
 
 
-def bucket_from_planes(vec, planes):
-    """Sign-pattern bucket id (0..2^len(planes)-1) of `vec` against an
-    explicit plane list.  `vec` elements are cast to double so the fold
-    matches the DuckDB twin exactly."""
-    bucket = F.lit(0)
-    for p, plane in enumerate(planes):
-        d = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(float(v)) for v in plane]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(d >= 0, F.lit(2**p)).otherwise(F.lit(0))
-    return bucket
-
-
 def bucket_sql(vec_sql: str, planes, fold: bool | None = None) -> str:
-    """SQL twin of bucket_from_planes — same per-plane dot, same int sum
-    of 2^p terms, built as one string (the multi-table builders were
-    spending seconds of driver time on per-element F.lit py4j calls).
+    """Sign-pattern bucket id (0..2^len(planes)-1) of a vector column
+    against an explicit plane list: the int sum of 2^p over the planes
+    with a non-negative dot, built as one string (the multi-table
+    builders were spending seconds of driver time on per-element F.lit
+    py4j calls).
 
-    ``fold`` picks the dot form; None auto-selects: unrolled codegen for
-    this bucket alone when it fits the unroll budget.  Callers that
-    combine MANY buckets into one expression tree (multi-table structs,
-    OR-chained probe filters) must pass fold=True past the budget — the
-    round-6 measurement found a single 4096-term tree costs minutes of
-    compile/interpreted fallback while the same values via the fold run
-    in seconds."""
+    ``fold`` picks the dot form; None applies :func:`_fold` to this
+    bucket alone.  Callers that combine MANY buckets into one expression
+    tree pass the decision for the whole tree."""
+    dim = len(planes[0])
     if fold is None:
-        fold = len(planes) * len(planes[0]) > UNROLL_MAX_TERMS
-    dot = _dot_fold_sql if fold else _dot_const_sql
+        fold = _fold(len(planes) * dim)
     terms = [
-        f"(CASE WHEN {dot(vec_sql, plane)} >= 0 "
+        f"(CASE WHEN {dot_sql(vec_sql, plane, dim, fold)} >= 0 "
         f"THEN {2 ** p} ELSE 0 END)"
         for p, plane in enumerate(planes)
     ]
@@ -207,44 +192,34 @@ def _qcol(col: str) -> str:
     return f"`{col}`"
 
 
-def _table_structs_sql(vec_sql: str, tables, bkt_name: str = "bkt",
-                       cast_long: bool = False) -> str:
-    """array(named_struct('tbl', t, '<bkt_name>', bucket_t)) over all
-    plane tables — the explode argument every multi-table builder uses,
-    as one SQL string.  The unroll budget is applied to the WHOLE array
-    (all tables land in one expression tree)."""
-    total_terms = sum(len(p) * len(p[0]) for p in tables)
-    fold = total_terms > UNROLL_MAX_TERMS
+def _bucket_rows(df, vec_col: str, tables, keep, cast_long: bool = False):
+    """``df`` keyed once per plane table: the ``keep`` columns plus
+    (tbl, bkt) — the side every multi-table LSH operator groups, joins or
+    partitions on.  The explode argument,
+    array(named_struct('tbl', t, 'bkt', bucket_t), ...), is one SQL
+    string, and the unroll budget is applied to the WHOLE array (all
+    tables land in one expression tree)."""
+    fold = _fold(sum(len(p) * len(p[0]) for p in tables))
     items = []
     for t, planes in enumerate(tables):
-        b = bucket_sql(vec_sql, planes, fold=fold)
+        b = bucket_sql(_qcol(vec_col), planes, fold=fold)
         if cast_long:
             b = f"cast({b} as long)"
-        items.append(f"named_struct('tbl', {t}, '{bkt_name}', {b})")
-    return "array(" + ", ".join(items) + ")"
-
-
-def hyperplane_bucket(vec, nplanes: int = 8, dim: int = 16):
-    """Sign-pattern bucket id of `vec` against the deterministic hyperplane
-    set.  `dim` MUST equal the embedding length — the planes are literal
-    arrays and zip_with null-pads on mismatch (nulling the dot product)."""
-    return bucket_from_planes(vec, _hyperplanes(dim, nplanes))
+        items.append(f"named_struct('tbl', {t}, 'bkt', {b})")
+    structs = "array(" + ", ".join(items) + ")"
+    return df.select(*keep, F.explode(F.expr(structs)).alias("tb")) \
+        .select(*keep, "tb.tbl", "tb.bkt")
 
 
 def _qbucket_planes(query_vec: list[float], planes) -> int:
     """Driver-side bucket of a literal query vector against an explicit
-    plane list (same fold as bucket_from_planes: sum() folds left from 0,
-    matching F.aggregate)."""
+    plane list (same fold as bucket_sql: sum() folds left from 0,
+    matching the SQL aggregate)."""
     b = 0
     for p, plane in enumerate(planes):
         if sum(a * v for a, v in zip(query_vec, plane)) >= 0:
             b |= 1 << p
     return b
-
-
-def query_bucket(query_vec: list[float], nplanes: int) -> int:
-    """Driver-side bucket of a literal query vector."""
-    return _qbucket_planes(query_vec, _hyperplanes(len(query_vec), nplanes))
 
 
 def _table_planes(dim: int, nplanes: int, n_tables: int):
@@ -260,10 +235,8 @@ def brute_force_topk(emb_df, query_vec: list[float], k: int = 10,
                      vec_col: str = "embedding", id_col: str = "vec_id"):
     """Exact cosine top-k against a literal query vector.  The query is a
     constant folded into the plan (the '1-row broadcast side'); its norm
-    is a driver-side constant (same left-fold sum + IEEE sqrt as the SQL
-    fold, so the quotient is bit-identical to cosine_expr against the
-    literal array)."""
-    cos = cos_const_sql(_qcol(vec_col), query_vec)
+    is a driver-side constant (see cos_sql)."""
+    cos = cos_sql(_qcol(vec_col), query_vec, len(query_vec))
     scored = emb_df.select(
         F.col(id_col),
         F.expr(f"cast({cos} * 1000000 as long)").alias("cos_micros"),
@@ -271,20 +244,52 @@ def brute_force_topk(emb_df, query_vec: list[float], k: int = 10,
     return scored.orderBy(F.col("cos_micros").desc(), F.col(id_col)).limit(k)
 
 
-def _probe_buckets(qbucket: int, nplanes: int, probe_hamming: int) -> list[int]:
-    """All buckets within `probe_hamming` bit flips of `qbucket` — every
-    XOR mask with popcount <= probe_hamming, any radius (a hand-rolled
-    radius-2 cap here once silently under-probed hamming >= 3 calls)."""
-    from itertools import combinations
-
-    probes = set()
-    for h in range(min(probe_hamming, nplanes) + 1):
+def _xor_masks(nplanes: int, max_hamming: int):
+    """(flipped planes, XOR mask) for every mask over ``nplanes`` bits
+    with popcount <= max_hamming — any radius (a hand-rolled radius-2 cap
+    here once silently under-probed hamming >= 3 calls)."""
+    for h in range(min(max_hamming, nplanes) + 1):
         for bits in combinations(range(nplanes), h):
-            m = 0
-            for b in bits:
-                m |= 1 << b
-            probes.add(qbucket ^ m)
-    return sorted(probes)
+            yield bits, sum(1 << b for b in bits)
+
+
+def _probe_buckets(qbucket: int, nplanes: int, probe_hamming: int) -> list[int]:
+    """All buckets within `probe_hamming` bit flips of `qbucket`."""
+    return sorted({qbucket ^ m for _, m in _xor_masks(nplanes, probe_hamming)})
+
+
+def _fixed_probe_plan(query_vec: list[float], tables, probe_hamming: int) -> dict:
+    """{tbl: probe buckets} for a fixed probe radius: every bucket within
+    ``probe_hamming`` bit flips of the query's bucket, in every table."""
+    return {
+        t: _probe_buckets(_qbucket_planes(query_vec, planes), len(planes), probe_hamming)
+        for t, planes in enumerate(tables)
+    }
+
+
+def _probe_filter(plan: dict, bucket_of, tbl_col: str | None = None):
+    """The single-query candidate predicate: OR over the plan's tables of
+    "the row's table-t bucket is one of t's probe buckets".
+    ``bucket_of(t)`` is the row's table-t bucket Column; with ``tbl_col``
+    (an index already keyed one row per table) each term also pins the
+    row's table."""
+    cond = None
+    for t, probes in plan.items():
+        c = bucket_of(t).isin(*probes)
+        if tbl_col is not None:
+            c = (F.col(tbl_col) == t) & c
+        cond = c if cond is None else (cond | c)
+    return cond
+
+
+def _scan_candidates(emb_df, tables, plan: dict, vec_col: str, id_col: str):
+    """(id, vec) rows passing the plan's probe filter, each row's buckets
+    computed at scan time."""
+    dim = len(tables[0][0])
+    fold = _fold(len(plan) * len(tables[0]) * dim)  # one OR-chained tree
+    cond = _probe_filter(
+        plan, lambda t: F.expr(bucket_sql(_qcol(vec_col), tables[t], fold=fold)))
+    return emb_df.select(F.col(id_col), F.col(vec_col)).where(cond)
 
 
 def ann_candidates(emb_df, query_vec: list[float],
@@ -298,14 +303,9 @@ def ann_candidates(emb_df, query_vec: list[float],
     lever dedup.embedding_near_dups uses).  Exposed separately so recall
     experiments can COUNT candidates (the scanned fraction) with the exact
     production predicate."""
-    dim = len(query_vec)
-    fold = n_tables * nplanes * dim > UNROLL_MAX_TERMS  # one OR-chained tree
-    cond = None
-    for planes in _table_planes(dim, nplanes, n_tables):
-        probes = _probe_buckets(_qbucket_planes(query_vec, planes), nplanes, probe_hamming)
-        c = F.expr(bucket_sql(_qcol(vec_col), planes, fold=fold)).isin(*probes)
-        cond = c if cond is None else (cond | c)
-    return emb_df.select(F.col(id_col), F.col(vec_col)).where(cond)
+    tables = _table_planes(len(query_vec), nplanes, n_tables)
+    plan = _fixed_probe_plan(query_vec, tables, probe_hamming)
+    return _scan_candidates(emb_df, tables, plan, vec_col, id_col)
 
 
 def lsh_topk(emb_df, query_vec: list[float], k: int = 10,
@@ -346,9 +346,7 @@ def bucket_histogram(emb_df, dim: int, vec_col: str = "embedding",
     keeps the scan-time variant self-contained.  Reusable across queries:
     compute once, plan many."""
     tables = _table_planes(dim, nplanes, n_tables)
-    keyed = emb_df.select(
-        F.explode(F.expr(_table_structs_sql(_qcol(vec_col), tables))).alias("tb"),
-    ).groupBy("tb.tbl", "tb.bkt").count()
+    keyed = _bucket_rows(emb_df, vec_col, tables, []).groupBy("tbl", "bkt").count()
     return {(r["tbl"], r["bkt"]): r["count"] for r in keyed.collect()}
 
 
@@ -380,8 +378,6 @@ def adaptive_probe_plan(hist: dict, query_vec: list[float],
     overlap, so it is an UPPER bound on rows scanned — the plan stops at
     or under budget, never silently past it.  All driver-side arithmetic
     on the tiny histogram; no corpus access."""
-    from itertools import combinations
-
     dim = len(query_vec)
     tables = _table_planes(dim, nplanes, n_tables)
     qn = math.sqrt(sum(v * v for v in query_vec)) or 1.0
@@ -390,12 +386,8 @@ def adaptive_probe_plan(hist: dict, query_vec: list[float],
         margins = [abs(sum(a * v for a, v in zip(query_vec, p))) / qn
                    for p in planes]
         qb = _qbucket_planes(query_vec, planes)
-        for h in range(min(max_hamming, nplanes) + 1):
-            for bits in combinations(range(nplanes), h):
-                m = 0
-                for b in bits:
-                    m |= 1 << b
-                probes.append((sum(margins[b] for b in bits), t, qb ^ m))
+        for bits, m in _xor_masks(nplanes, max_hamming):
+            probes.append((sum(margins[b] for b in bits), t, qb ^ m))
     probes.sort()
     n_total = sum(hist.values()) / max(1, n_tables)  # each row keyed once per table
     target = target_frac * n_total
@@ -424,12 +416,7 @@ def ann_candidates_adaptive(emb_df, query_vec: list[float],
     plan = adaptive_probe_plan(hist, query_vec, nplanes, n_tables,
                                target_frac, max_hamming)
     tables = _table_planes(dim, nplanes, n_tables)
-    fold = len(plan) * nplanes * dim > UNROLL_MAX_TERMS  # one OR-chained tree
-    cond = None
-    for t, probes in plan.items():
-        c = F.expr(bucket_sql(_qcol(vec_col), tables[t], fold=fold)).isin(*probes)
-        cond = c if cond is None else (cond | c)
-    return emb_df.select(F.col(id_col), F.col(vec_col)).where(cond)
+    return _scan_candidates(emb_df, tables, plan, vec_col, id_col)
 
 
 def lsh_topk_adaptive(emb_df, query_vec: list[float], k: int = 10,
@@ -448,6 +435,23 @@ def lsh_topk_adaptive(emb_df, query_vec: list[float], k: int = 10,
                                    nplanes, n_tables, target_frac,
                                    max_hamming, hist)
     return brute_force_topk(cand, query_vec, k, vec_col, id_col)
+
+
+def _rank_topk(cand, dim: int, k: int, vec_col: str, id_col: str,
+               query_id_col: str):
+    """The batch paths' tail: score each (query, candidate) row against
+    the query vector column ``_qv`` and keep rn = 1..k per query (ties
+    broken by id, so output is deterministic)."""
+    from pyspark.sql import Window
+
+    scored = cand.select(
+        F.col(query_id_col), F.col(id_col),
+        F.expr(f"cast({cos_sql(_qcol(vec_col), '`_qv`', dim)} * 1000000 "
+               "as long)").alias("cos_micros"),
+    )
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col("cos_micros").desc(), F.col(id_col))
+    return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
 
 
 def lsh_topk_batch(emb_df, query_df, dim: int, k: int = 10,
@@ -471,43 +475,24 @@ def lsh_topk_batch(emb_df, query_df, dim: int, k: int = 10,
 
     Returns (query_id, vec_id, cos_micros, rn) with rn = 1..k per query
     (ties broken by vec_id, so output is deterministic)."""
-    from pyspark.sql import Window
     from pyspark.sql.functions import broadcast
 
     tables = _table_planes(dim, nplanes, n_tables)
     masks = _probe_buckets(0, nplanes, probe_hamming)  # XOR masks, popcount<=h
-    corpus = emb_df.select(
-        F.col(id_col), F.col(vec_col),
-        F.explode(F.expr(_table_structs_sql(_qcol(vec_col), tables))).alias("tb"),
-    ).select(id_col, vec_col, "tb.tbl", "tb.bkt")
-    queries = query_df.select(
-        F.col(query_id_col), F.col(query_vec_col).alias("_qv"),
-        F.explode(F.expr(_table_structs_sql(
-            _qcol(query_vec_col), tables, bkt_name="qbkt"))).alias("tb"),
-    ).select(
-        query_id_col, "_qv", "tb.tbl",
+    corpus = _bucket_rows(emb_df, vec_col, tables, [id_col, vec_col])
+    queries = _bucket_rows(query_df, query_vec_col, tables,
+                           [query_id_col, query_vec_col]).select(
+        query_id_col, F.col(query_vec_col).alias("_qv"), "tbl", "bkt",
         F.explode(F.array(*[F.lit(m) for m in masks])).alias("_mask"),
-        F.col("tb.qbkt"),
     ).select(
         query_id_col, "_qv", "tbl",
-        F.col("qbkt").bitwiseXOR(F.col("_mask")).alias("bkt"),
+        F.col("bkt").bitwiseXOR(F.col("_mask")).alias("bkt"),
     )
     cand = (
         corpus.join(broadcast(queries), ["tbl", "bkt"])
         .dropDuplicates([query_id_col, id_col])
     )
-    scored = cand.select(
-        F.col(query_id_col), F.col(id_col),
-        F.expr(f"cast({cos_pair_sql(_qcol(vec_col), '`_qv`', dim)} * 1000000 "
-               "as long)").alias("cos_micros"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_micros").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-    )
+    return _rank_topk(cand, dim, k, vec_col, id_col, query_id_col)
 
 
 def lsh_topk_batch_adaptive(emb_df, query_df, dim: int, k: int = 10,
@@ -533,7 +518,6 @@ def lsh_topk_batch_adaptive(emb_df, query_df, dim: int, k: int = 10,
     scores) — pinned by test.
 
     Returns (query_id, vec_id, cos_micros, rn), rn = 1..k per query."""
-    from pyspark.sql import Window
     from pyspark.sql.functions import broadcast
 
     spark = emb_df.sparkSession
@@ -568,26 +552,13 @@ def lsh_topk_batch_adaptive(emb_df, query_df, dim: int, k: int = 10,
     qvecs = spark.createDataFrame(
         qvec_rows, f"{query_id_col} long, _qv array<double>")
     tables = _table_planes(dim, nplanes, n_tables)
-    corpus = emb_df.select(
-        F.col(id_col), F.col(vec_col),
-        F.explode(F.expr(_table_structs_sql(_qcol(vec_col), tables,
-                                            cast_long=True))).alias("tb"),
-    ).select(id_col, vec_col, F.col("tb.tbl").cast("int").alias("tbl"),
-             "tb.bkt")
+    corpus = _bucket_rows(emb_df, vec_col, tables, [id_col, vec_col], cast_long=True)
     cand = (
         corpus.join(broadcast(probes), ["tbl", "bkt"])
         .dropDuplicates([query_id_col, id_col])
         .join(broadcast(qvecs), query_id_col)
     )
-    scored = cand.select(
-        F.col(query_id_col), F.col(id_col),
-        F.expr(f"cast({cos_pair_sql(_qcol(vec_col), '`_qv`', dim)} * 1000000 "
-               "as long)").alias("cos_micros"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_micros").desc(), F.col(id_col))
-    return (scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k))
+    return _rank_topk(cand, dim, k, vec_col, id_col, query_id_col)
 
 
 def build_ann_index(emb_df, path: str, dim: int,
@@ -604,10 +575,7 @@ def build_ann_index(emb_df, path: str, dim: int,
     buckets for 100 TB -> ~100 GB per bucket, further split by parquet
     row groups)."""
     tables = _table_planes(dim, nplanes, n_tables)
-    keyed = emb_df.select(
-        F.col(id_col), F.col(vec_col),
-        F.explode(F.expr(_table_structs_sql(_qcol(vec_col), tables))).alias("tb"),
-    ).select(id_col, vec_col, "tb.tbl", "tb.bkt")
+    keyed = _bucket_rows(emb_df, vec_col, tables, [id_col, vec_col])
     keyed.write.mode("overwrite").partitionBy("tbl", "bkt").parquet(path)
 
 
@@ -620,8 +588,9 @@ def lsh_topk_indexed(spark, index_path: str, query_vec: list[float], k: int = 10
     directories (verify with .explain -> PartitionFilters).  A row that
     collides with the query in several tables is scored once
     (dropDuplicates on the id before scoring)."""
-    dim = len(query_vec)
     idx = spark.read.parquet(index_path)
+    tables = _table_planes(len(query_vec), nplanes, n_tables)
+    plan = _fixed_probe_plan(query_vec, tables, probe_hamming)
     if "tbl" not in idx.columns:
         # index written by the pre-multi-table layout (partitioned by bkt
         # only): valid for single-table queries, unreadable for more
@@ -631,14 +600,8 @@ def lsh_topk_indexed(spark, index_path: str, query_vec: list[float], k: int = 10
                 f"rebuild with build_ann_index(..., n_tables={n_tables}) "
                 "to query multiple tables"
             )
-        planes = _table_planes(dim, nplanes, 1)[0]
-        probes = _probe_buckets(_qbucket_planes(query_vec, planes), nplanes, probe_hamming)
-        cand = idx.where(F.col("bkt").isin(*probes))
-        return brute_force_topk(cand, query_vec, k, vec_col, id_col)
-    cond = None
-    for t, planes in enumerate(_table_planes(dim, nplanes, n_tables)):
-        probes = _probe_buckets(_qbucket_planes(query_vec, planes), nplanes, probe_hamming)
-        c = (F.col("tbl") == t) & F.col("bkt").isin(*probes)
-        cond = c if cond is None else (cond | c)
-    cand = idx.where(cond).dropDuplicates([id_col])
+        cand = idx.where(_probe_filter(plan, lambda t: F.col("bkt")))
+    else:
+        cand = idx.where(_probe_filter(plan, lambda t: F.col("bkt"), tbl_col="tbl")) \
+            .dropDuplicates([id_col])
     return brute_force_topk(cand, query_vec, k, vec_col, id_col)

@@ -446,7 +446,7 @@ def test_indexed_ann_legacy_single_table_layout(spark, tmp_path):
 
     from liblognorm_spark.functions.similarity import (
         _table_planes,
-        bucket_from_planes,
+        bucket_sql,
         lsh_topk,
         lsh_topk_indexed,
     )
@@ -457,7 +457,7 @@ def test_indexed_ann_legacy_single_table_layout(spark, tmp_path):
     planes = _table_planes(64, 6, 1)[0]
     emb.select(
         "vec_id", "embedding",
-        bucket_from_planes(FF.col("embedding"), planes).alias("bkt"),
+        FF.expr(bucket_sql("`embedding`", planes)).alias("bkt"),
     ).write.partitionBy("bkt").parquet(path)
     scan = [tuple(r) for r in lsh_topk(emb, q, k=10).collect()]
     idx = [tuple(r) for r in lsh_topk_indexed(spark, path, q, k=10).collect()]
