@@ -30,8 +30,13 @@ MAX_ADAPTIVE_BATCH_QUERIES = 50_000
 
 def _sql_f(v: float) -> str:
     """A Python float as a Spark SQL DOUBLE literal (repr round-trips the
-    exact double; D keeps the parser off DECIMAL)."""
-    return f"{float(v)!r}D"
+    exact double; D keeps the parser off DECIMAL).  Spark SQL has no
+    inf/NaN literal — repr's `infD` fails at analysis as an unresolved
+    column — so a non-finite query, plane or centroid fails here."""
+    f = float(v)
+    if not math.isfinite(f):
+        raise ValueError(f"vector literal {f!r} is not finite")
+    return f"{f!r}D"
 
 
 #: above this many unrolled terms per EXPRESSION TREE, fall back to the
