@@ -70,7 +70,8 @@ def _assign(df, vec_col: str, centroids, out):
     """``out`` columns + ``cluster`` (0-based): argmax cosine against the
     literal centroids, ties to the lowest cluster index (array_position
     returns the FIRST occurrence of the max — DuckDB's list_position
-    behaves identically).
+    behaves identically).  A vector whose length is not the centroids'
+    dim has all-NULL cosines and so a NULL cluster.
 
     Staged projections: the row norm is a column ``_nrm`` (computed once,
     read by all k cosines — k=8 inlines 16 norm copies per row, larger k

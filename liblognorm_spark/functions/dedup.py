@@ -417,8 +417,8 @@ def embedding_near_dups(emb_df, vec_col: str = "embedding", id_col: str = "vec_i
     With one table of t planes the capture probability for a pair at angle
     θ is (1-θ/π)^t — hopeless for moderate similarity; L tables raise it to
     1-(1-p^t)^L, which is the same banding trick MinHash-LSH uses.  ``dim``
-    must equal the embedding length: hyperplanes are literal arrays of
-    ``dim`` coefficients and the dots read exactly ``dim`` elements."""
+    must equal the embedding length: a vector of any other length has a
+    NULL bucket and cosine, so it pairs with nothing."""
     from liblognorm_spark.functions.similarity import _bucket_rows, _table_planes, cos_sql
 
     tables = _table_planes(dim, nplanes, ntables)

@@ -68,15 +68,30 @@ def _fold(terms: int, per_plan: bool = False) -> bool:
     return per_plan or terms > UNROLL_MAX_TERMS
 
 
-def _products(a: str, b, dim: int) -> str:
-    """``(a[0]*b[0]) + (a[1]*b[1]) + ...`` as one left-associative chain;
-    ``b`` is a vector column's SQL or a list of literal coefficients."""
-    if isinstance(b, str):
-        return " + ".join(
-            f"(cast({a}[{i}] as double) * cast({b}[{i}] as double))"
-            for i in range(dim))
-    return " + ".join(
-        f"(cast({a}[{i}] as double) * {_sql_f(b[i])})" for i in range(dim))
+def _guard(body: str, dim: int, *vecs: str) -> str:
+    """``body`` when every vector column in ``vecs`` has exactly ``dim``
+    elements, else NULL — the vector-length contract, identical on both
+    forms.  Unguarded, the unrolled chain raised INVALID_ARRAY_INDEX on a
+    shorter vector under ANSI mode and silently read the first dim
+    elements of a longer one, while the literal fold null-padded both to
+    NULL.  A NULL vector or element is NULL on both forms too."""
+    sizes = " AND ".join(f"size({v}) = {dim}" for v in vecs)
+    return f"(CASE WHEN {sizes} THEN {body} END)"
+
+
+def _dot(a: str, b, dim: int, fold: bool) -> str:
+    """The unguarded dot in the form ``fold`` picks (see dot_sql)."""
+    if fold:
+        arr = b if isinstance(b, str) else "array(" + ", ".join(_sql_f(v) for v in b) + ")"
+        return (
+            f"aggregate(zip_with({a}, {arr}, "
+            "(x, y) -> cast(x as double) * cast(y as double)), "
+            "cast(0.0 as double), (acc, v) -> acc + v)"
+        )
+    ys = ([f"cast({b}[{i}] as double)" for i in range(dim)] if isinstance(b, str)
+          else [_sql_f(v) for v in b])
+    return "(" + " + ".join(
+        f"(cast({a}[{i}] as double) * {y})" for i, y in enumerate(ys)) + ")"
 
 
 def dot_sql(a: str, b, dim: int, fold: bool | None = None) -> str:
@@ -92,69 +107,54 @@ def dot_sql(a: str, b, dim: int, fold: bool | None = None) -> str:
       Measured on the 200k-vector tier this is the difference between
       minutes and seconds for every cosine-shaped operator.
 
-    The two are bit-identical for dim-length vectors: a left-assoc `+`
-    chain adds in exactly the fold's order, and 0.0 + x == x for every x
-    the downstream integer scaling can distinguish.  Requires
-    len(vec) == dim: the fold null-padded a longer vector to NULL, the
-    unrolled chain only reads the first dim elements — every caller
-    already pins dim."""
+    The two are bit-identical: a left-assoc `+` chain adds in exactly the
+    fold's order, and 0.0 + x == x for every x the downstream integer
+    scaling can distinguish.  A vector whose length is not ``dim`` gives
+    NULL on both (see _guard)."""
     if fold is None:
         fold = _fold(dim)
-    if not fold:
-        return f"({_products(a, b, dim)})"
-    arr = b if isinstance(b, str) else "array(" + ", ".join(_sql_f(v) for v in b) + ")"
-    return (
-        f"aggregate(zip_with({a}, {arr}, "
-        "(x, y) -> cast(x as double) * cast(y as double)), "
-        "cast(0.0 as double), (acc, v) -> acc + v)"
-    )
+    return _guard(_dot(a, b, dim, fold), dim, *([a, b] if isinstance(b, str) else [a]))
 
 
 def norm_sql(a: str, dim: int, fold: bool | None = None) -> str:
     """Euclidean norm of a vector column: the sqrt of its self-dot, in the
-    same two forms as :func:`dot_sql` (squares are never -0.0, so even the
-    signed-zero corner agrees).  Same pinned-dim contract: an unrolled
-    norm of a vector SHORTER than dim (including an empty array) reads
-    out-of-range elements — callers must filter/validate vector length
-    upstream, as every operator here documents."""
+    same two forms and with the same length guard as :func:`dot_sql`
+    (squares are never -0.0, so even the signed-zero corner agrees)."""
     if fold is None:
         fold = _fold(dim)
-    if fold:
-        return f"sqrt({dot_sql(a, a, dim, fold=True)})"
-    return f"sqrt({_products(a, a, dim)})"
+    return _guard(f"sqrt({_dot(a, a, dim, fold)})", dim, a)
 
 
 def cos_sql(a: str, b, dim: int, na: str | None = None, nb: str | None = None,
             fold: bool | None = None) -> str:
     """Cosine of the vector column ``a`` with ``b`` (a column's SQL or a
-    list of literal coefficients); 0.0 when either norm is zero.
+    list of literal coefficients); 0.0 when either norm is zero, NULL
+    when a vector's length is not ``dim``.
 
     ``na``/``nb`` name already-computed norm columns, so a row's norm is
     evaluated once instead of inside every cosine that reads it; a
-    column side without one gets its norm inline from :func:`norm_sql`.
-    A literal side's norm is a driver-side constant: Python's sum() folds
-    left from 0 exactly like the SQL aggregate and math.sqrt is IEEE, so
-    it is the same double and the quotient is bit-identical (a zero-norm
-    literal makes the whole cosine the constant 0.0)."""
+    column side without one gets its norm inline.  A literal side's norm
+    is a driver-side constant: Python's sum() folds left from 0 exactly
+    like the SQL aggregate and math.sqrt is IEEE, so it is the same
+    double and the quotient is bit-identical (a zero-norm literal makes
+    the cosine 0.0)."""
     inline_norms = (na is None) + (isinstance(b, str) and nb is None)
     if fold is None:  # the CASE reads each inline norm twice
         fold = _fold(dim * (1 + 2 * inline_norms))
-    if na is None:
-        na = norm_sql(a, dim, fold)
+    vecs = [a, b] if isinstance(b, str) else [a]
+    na = na or f"sqrt({_dot(a, a, dim, fold)})"
     if isinstance(b, str):
-        if nb is None:
-            nb = norm_sql(b, dim, fold)
+        nb = nb or f"sqrt({_dot(b, b, dim, fold)})"
         zero = f"({na} = cast(0.0 as double)) OR ({nb} = cast(0.0 as double))"
     else:
         bn = math.sqrt(sum(float(v) * float(v) for v in b))
         if bn == 0.0:
-            return "cast(0.0 as double)"
+            return _guard("cast(0.0 as double)", dim, a)
         nb = _sql_f(bn)
         zero = f"{na} = cast(0.0 as double)"
-    return (
-        f"(CASE WHEN {zero} THEN cast(0.0 as double) "
-        f"ELSE {dot_sql(a, b, dim, fold)} / ({na} * {nb}) END)"
-    )
+    return _guard(
+        f"CASE WHEN {zero} THEN cast(0.0 as double) "
+        f"ELSE {_dot(a, b, dim, fold)} / ({na} * {nb}) END", dim, *vecs)
 
 
 def _hyperplanes(dim: int, nplanes: int, seed: str = "lls-hp"):
@@ -181,16 +181,19 @@ def bucket_sql(vec_sql: str, planes, fold: bool | None = None) -> str:
 
     ``fold`` picks the dot form; None applies :func:`_fold` to this
     bucket alone.  Callers that combine MANY buckets into one expression
-    tree pass the decision for the whole tree."""
+    tree pass the decision for the whole tree.  A vector whose length is
+    not the planes' dim has a NULL bucket, so it matches no probe and
+    joins no bucket (see _guard); a NULL element, as in the DuckDB twin,
+    only leaves the bits of the planes it nulls unset."""
     dim = len(planes[0])
     if fold is None:
         fold = _fold(len(planes) * dim)
     terms = [
-        f"(CASE WHEN {dot_sql(vec_sql, plane, dim, fold)} >= 0 "
+        f"(CASE WHEN {_dot(vec_sql, plane, dim, fold)} >= 0 "
         f"THEN {2 ** p} ELSE 0 END)"
         for p, plane in enumerate(planes)
     ]
-    return "(0 + " + " + ".join(terms) + ")"
+    return _guard("(0 + " + " + ".join(terms) + ")", dim, vec_sql)
 
 
 def _qcol(col: str) -> str:
