@@ -34,16 +34,13 @@ Spark-first shape, designed for 100 TB:
   (the dedup._cap_buckets discipline) so one degenerate centroid can
   never turn the equi-join quadratic at corpus scale.
 - Literal-heavy expressions (k x dim centroid constants, the per-plane
-  dots) are built by similarity's one vector builder as ONE SQL string
-  handed to ``F.expr`` instead of thousands of per-element
-  ``F.lit``/py4j round-trips: the round-6 measurement showed ~1-1.5 s
-  of pure driver-side Python per Lloyd iteration in expression
-  CONSTRUCTION alone (guide §1.2 — fix the per-task work, where the
-  "task" here is the driver).  The centroid dots keep the interpreted
-  fold (zip_with + aggregate, left fold from 0.0) because their literals
-  change every iteration; the literal-free row norms and pair dots are
-  unrolled for codegen.  Both forms give bit-identical values
-  (similarity.dot_sql).
+  dots) are built as ONE SQL string handed to ``F.expr`` instead of
+  thousands of per-element ``F.lit``/py4j round-trips: the round-6
+  measurement showed ~1-1.5 s of pure driver-side Python per Lloyd
+  iteration in expression CONSTRUCTION alone (guide §1.2 — fix the
+  per-task work, where the "task" here is the driver).  The centroid
+  dots always fold and the row norms and pair dots unroll
+  (similarity._fold); both forms give bit-identical values.
 
 Every value that leaves these operators is integral (ids, cluster ids,
 counts, micro-scaled cosines), so the DuckDB oracles compare exactly.
@@ -78,10 +75,8 @@ def _assign(df, vec_col: str, centroids, out):
     would explode the generated code quadratically), then the cosine
     array is a column (read twice by array_position/array_max) — the
     single-expression form re-evaluated both.  Each centroid's norm is a
-    driver-side constant, and the centroid dots always keep the FOLD
-    form: the literals change every Lloyd iteration (see
-    similarity._fold), and a k=64 unrolled array costs ~40 s of compile
-    per plan."""
+    driver-side constant; the centroid dots always fold, because their
+    literals change every Lloyd iteration (similarity._fold)."""
     dim = len(centroids[0])
     v = _qcol(vec_col)
     fold = _fold(len(centroids) * dim, per_plan=True)

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 import hashlib
 import math
+import operator
+from functools import reduce
 from itertools import combinations
 
 from pyspark.sql import functions as F
@@ -275,19 +277,11 @@ def _fixed_probe_plan(query_vec: list[float], tables, probe_hamming: int) -> dic
     }
 
 
-def _probe_filter(plan: dict, bucket_of, tbl_col: str | None = None):
+def _probe_filter(plan: dict, match):
     """The single-query candidate predicate: OR over the plan's tables of
-    "the row's table-t bucket is one of t's probe buckets".
-    ``bucket_of(t)`` is the row's table-t bucket Column; with ``tbl_col``
-    (an index already keyed one row per table) each term also pins the
-    row's table."""
-    cond = None
-    for t, probes in plan.items():
-        c = bucket_of(t).isin(*probes)
-        if tbl_col is not None:
-            c = (F.col(tbl_col) == t) & c
-        cond = c if cond is None else (cond | c)
-    return cond
+    ``match(t, probes)``, "the row's table-t bucket is one of t's probe
+    buckets"."""
+    return reduce(operator.or_, (match(t, probes) for t, probes in plan.items()))
 
 
 def _scan_candidates(emb_df, tables, plan: dict, vec_col: str, id_col: str):
@@ -295,8 +289,8 @@ def _scan_candidates(emb_df, tables, plan: dict, vec_col: str, id_col: str):
     computed at scan time."""
     dim = len(tables[0][0])
     fold = _fold(len(plan) * len(tables[0]) * dim)  # one OR-chained tree
-    cond = _probe_filter(
-        plan, lambda t: F.expr(bucket_sql(_qcol(vec_col), tables[t], fold=fold)))
+    cond = _probe_filter(plan, lambda t, probes: F.expr(
+        bucket_sql(_qcol(vec_col), tables[t], fold=fold)).isin(*probes))
     return emb_df.select(F.col(id_col), F.col(vec_col)).where(cond)
 
 
@@ -386,8 +380,7 @@ def adaptive_probe_plan(hist: dict, query_vec: list[float],
     overlap, so it is an UPPER bound on rows scanned — the plan stops at
     or under budget, never silently past it.  All driver-side arithmetic
     on the tiny histogram; no corpus access."""
-    dim = len(query_vec)
-    tables = _table_planes(dim, nplanes, n_tables)
+    tables = _table_planes(len(query_vec), nplanes, n_tables)
     qn = math.sqrt(sum(v * v for v in query_vec)) or 1.0
     probes = []  # (cost, tbl, bucket)
     for t, planes in enumerate(tables):
@@ -445,13 +438,20 @@ def lsh_topk_adaptive(emb_df, query_vec: list[float], k: int = 10,
     return brute_force_topk(cand, query_vec, k, vec_col, id_col)
 
 
-def _rank_topk(cand, dim: int, k: int, vec_col: str, id_col: str,
-               query_id_col: str):
-    """The batch paths' tail: score each (query, candidate) row against
-    the query vector column ``_qv`` and keep rn = 1..k per query (ties
-    broken by id, so output is deterministic)."""
+def _batch_topk(corpus, probes, qvecs, dim: int, k: int, vec_col: str,
+                id_col: str, query_id_col: str):
+    """The batch paths' tail: the keyed corpus equi-joins the BROADCAST
+    probe side on (tbl, bkt), candidates dedupe per (query, doc), each is
+    scored against the query vector column ``_qv`` (carried by
+    ``probes``, or joined from ``qvecs``), and rn = 1..k is kept per
+    query (ties broken by id, so output is deterministic)."""
     from pyspark.sql import Window
+    from pyspark.sql.functions import broadcast
 
+    cand = corpus.join(broadcast(probes), ["tbl", "bkt"]) \
+        .dropDuplicates([query_id_col, id_col])
+    if qvecs is not None:
+        cand = cand.join(broadcast(qvecs), query_id_col)
     scored = cand.select(
         F.col(query_id_col), F.col(id_col),
         F.expr(f"cast({cos_sql(_qcol(vec_col), '`_qv`', dim)} * 1000000 "
@@ -483,8 +483,6 @@ def lsh_topk_batch(emb_df, query_df, dim: int, k: int = 10,
 
     Returns (query_id, vec_id, cos_micros, rn) with rn = 1..k per query
     (ties broken by vec_id, so output is deterministic)."""
-    from pyspark.sql.functions import broadcast
-
     tables = _table_planes(dim, nplanes, n_tables)
     masks = _probe_buckets(0, nplanes, probe_hamming)  # XOR masks, popcount<=h
     corpus = _bucket_rows(emb_df, vec_col, tables, [id_col, vec_col])
@@ -496,11 +494,7 @@ def lsh_topk_batch(emb_df, query_df, dim: int, k: int = 10,
         query_id_col, "_qv", "tbl",
         F.col("bkt").bitwiseXOR(F.col("_mask")).alias("bkt"),
     )
-    cand = (
-        corpus.join(broadcast(queries), ["tbl", "bkt"])
-        .dropDuplicates([query_id_col, id_col])
-    )
-    return _rank_topk(cand, dim, k, vec_col, id_col, query_id_col)
+    return _batch_topk(corpus, queries, None, dim, k, vec_col, id_col, query_id_col)
 
 
 def lsh_topk_batch_adaptive(emb_df, query_df, dim: int, k: int = 10,
@@ -526,8 +520,6 @@ def lsh_topk_batch_adaptive(emb_df, query_df, dim: int, k: int = 10,
     scores) — pinned by test.
 
     Returns (query_id, vec_id, cos_micros, rn), rn = 1..k per query."""
-    from pyspark.sql.functions import broadcast
-
     spark = emb_df.sparkSession
     if hist is None:
         hist = bucket_histogram(emb_df, dim, vec_col, nplanes, n_tables)
@@ -561,12 +553,7 @@ def lsh_topk_batch_adaptive(emb_df, query_df, dim: int, k: int = 10,
         qvec_rows, f"{query_id_col} long, _qv array<double>")
     tables = _table_planes(dim, nplanes, n_tables)
     corpus = _bucket_rows(emb_df, vec_col, tables, [id_col, vec_col], cast_long=True)
-    cand = (
-        corpus.join(broadcast(probes), ["tbl", "bkt"])
-        .dropDuplicates([query_id_col, id_col])
-        .join(broadcast(qvecs), query_id_col)
-    )
-    return _rank_topk(cand, dim, k, vec_col, id_col, query_id_col)
+    return _batch_topk(corpus, probes, qvecs, dim, k, vec_col, id_col, query_id_col)
 
 
 def build_ann_index(emb_df, path: str, dim: int,
@@ -608,8 +595,8 @@ def lsh_topk_indexed(spark, index_path: str, query_vec: list[float], k: int = 10
                 f"rebuild with build_ann_index(..., n_tables={n_tables}) "
                 "to query multiple tables"
             )
-        cand = idx.where(_probe_filter(plan, lambda t: F.col("bkt")))
+        cand = idx.where(_probe_filter(plan, lambda t, probes: F.col("bkt").isin(*probes)))
     else:
-        cand = idx.where(_probe_filter(plan, lambda t: F.col("bkt"), tbl_col="tbl")) \
-            .dropDuplicates([id_col])
+        cand = idx.where(_probe_filter(plan, lambda t, probes: (
+            (F.col("tbl") == t) & F.col("bkt").isin(*probes)))).dropDuplicates([id_col])
     return brute_force_topk(cand, query_vec, k, vec_col, id_col)
