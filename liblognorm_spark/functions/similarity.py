@@ -71,14 +71,18 @@ def _fold(terms: int, per_plan: bool = False) -> bool:
 
 
 def _guard(body: str, dim: int, *vecs: str) -> str:
-    """``body`` when every vector column in ``vecs`` has exactly ``dim``
-    elements, else NULL — the vector-length contract, identical on both
-    forms.  Unguarded, the unrolled chain raised INVALID_ARRAY_INDEX on a
-    shorter vector under ANSI mode and silently read the first dim
-    elements of a longer one, while the literal fold null-padded both to
-    NULL.  A NULL vector or element is NULL on both forms too."""
+    """``body`` times 1 when every vector column in ``vecs`` has exactly
+    ``dim`` elements, else times NULL — the vector-length contract, the
+    same on both forms.  Unguarded, the unrolled chain raised
+    INVALID_ARRAY_INDEX on a shorter vector under ANSI mode (element
+    reads now use get(), NULL out of range) and silently read the first
+    dim elements of a longer one, while the literal fold null-padded both
+    to NULL.  A factor, not a CASE around ``body``: inside a conditional
+    branch codegen no longer shares a cosine's repeated norms, which
+    pushed the batch ranking stage past the 64 KB method limit; x * 1 is
+    x exactly for every double and int."""
     sizes = " AND ".join(f"size({v}) = {dim}" for v in vecs)
-    return f"(CASE WHEN {sizes} THEN {body} END)"
+    return f"({body} * (CASE WHEN {sizes} THEN 1 END))"
 
 
 def _dot(a: str, b, dim: int, fold: bool) -> str:
@@ -90,10 +94,10 @@ def _dot(a: str, b, dim: int, fold: bool) -> str:
             "(x, y) -> cast(x as double) * cast(y as double)), "
             "cast(0.0 as double), (acc, v) -> acc + v)"
         )
-    ys = ([f"cast({b}[{i}] as double)" for i in range(dim)] if isinstance(b, str)
+    ys = ([f"cast(get({b}, {i}) as double)" for i in range(dim)] if isinstance(b, str)
           else [_sql_f(v) for v in b])
     return "(" + " + ".join(
-        f"(cast({a}[{i}] as double) * {y})" for i, y in enumerate(ys)) + ")"
+        f"(cast(get({a}, {i}) as double) * {y})" for i, y in enumerate(ys)) + ")"
 
 
 def dot_sql(a: str, b, dim: int, fold: bool | None = None) -> str:
@@ -143,20 +147,21 @@ def cos_sql(a: str, b, dim: int, na: str | None = None, nb: str | None = None,
     inline_norms = (na is None) + (isinstance(b, str) and nb is None)
     if fold is None:  # the CASE reads each inline norm twice
         fold = _fold(dim * (1 + 2 * inline_norms))
-    vecs = [a, b] if isinstance(b, str) else [a]
-    na = na or f"sqrt({_dot(a, a, dim, fold)})"
+    zero_cos = _guard("cast(0.0 as double)", dim, *([a, b] if isinstance(b, str) else [a]))
+    na = na or norm_sql(a, dim, fold)
     if isinstance(b, str):
-        nb = nb or f"sqrt({_dot(b, b, dim, fold)})"
+        nb = nb or norm_sql(b, dim, fold)
         zero = f"({na} = cast(0.0 as double)) OR ({nb} = cast(0.0 as double))"
     else:
         bn = math.sqrt(sum(float(v) * float(v) for v in b))
         if bn == 0.0:
-            return _guard("cast(0.0 as double)", dim, a)
+            return zero_cos
         nb = _sql_f(bn)
         zero = f"{na} = cast(0.0 as double)"
-    return _guard(
-        f"CASE WHEN {zero} THEN cast(0.0 as double) "
-        f"ELSE {_dot(a, b, dim, fold)} / ({na} * {nb}) END", dim, *vecs)
+    return (
+        f"(CASE WHEN {zero} THEN {zero_cos} "
+        f"ELSE {dot_sql(a, b, dim, fold)} / ({na} * {nb}) END)"
+    )
 
 
 def _hyperplanes(dim: int, nplanes: int, seed: str = "lls-hp"):
