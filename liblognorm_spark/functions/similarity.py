@@ -207,7 +207,7 @@ def _qcol(col: str) -> str:
     return f"`{col}`"
 
 
-def _bucket_rows(df, vec_col: str, tables, keep, cast_long: bool = False):
+def _bucket_rows(df, vec_col: str, tables, keep):
     """``df`` keyed once per plane table: the ``keep`` columns plus
     (tbl, bkt) — the side every multi-table LSH operator groups, joins or
     partitions on.  The explode argument,
@@ -215,13 +215,9 @@ def _bucket_rows(df, vec_col: str, tables, keep, cast_long: bool = False):
     string, and the unroll budget is applied to the WHOLE array (all
     tables land in one expression tree)."""
     fold = _fold(sum(len(p) * len(p[0]) for p in tables))
-    items = []
-    for t, planes in enumerate(tables):
-        b = bucket_sql(_qcol(vec_col), planes, fold=fold)
-        if cast_long:
-            b = f"cast({b} as long)"
-        items.append(f"named_struct('tbl', {t}, 'bkt', {b})")
-    structs = "array(" + ", ".join(items) + ")"
+    structs = "array(" + ", ".join(
+        f"named_struct('tbl', {t}, 'bkt', {bucket_sql(_qcol(vec_col), planes, fold=fold)})"
+        for t, planes in enumerate(tables)) + ")"
     return df.select(*keep, F.explode(F.expr(structs)).alias("tb")) \
         .select(*keep, "tb.tbl", "tb.bkt")
 
@@ -557,7 +553,7 @@ def lsh_topk_batch_adaptive(emb_df, query_df, dim: int, k: int = 10,
     qvecs = spark.createDataFrame(
         qvec_rows, f"{query_id_col} long, _qv array<double>")
     tables = _table_planes(dim, nplanes, n_tables)
-    corpus = _bucket_rows(emb_df, vec_col, tables, [id_col, vec_col], cast_long=True)
+    corpus = _bucket_rows(emb_df, vec_col, tables, [id_col, vec_col])
     return _batch_topk(corpus, probes, qvecs, dim, k, vec_col, id_col, query_id_col)
 
 
