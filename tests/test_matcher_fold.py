@@ -5,9 +5,8 @@ to that rule's own pattern, skipping the cohort alternation.  These tests
 pin that fold-on output is byte-identical to fold-off on the shapes that
 could break it: shared literal prefixes (no sole rule -> no fold), rules
 whose prefilter extends the dispatch window, walker-only rules, complex
-(validated) fields, annotations (constant-JSON tail path), near-miss rows
-(definitive fold miss -> unmatched diagnostics), and decoration options
-(tail shortcut disabled).
+(validated) fields, annotations, near-miss rows (definitive fold miss ->
+unmatched diagnostics), and decoration options.
 """
 
 import pandas as pd
@@ -33,8 +32,8 @@ def _run_both(rb_text: str, texts: list, **opts):
     return off, on, crb_on
 
 
-# >64 distinct prefixes are needed to reach the vectorized fold path, so
-# every fixture pads with generated filler rules/rows.
+# every batch folds; the generated filler rules/rows give each fixture many
+# distinct sole-rule prefixes, so the fold fires beside the shape under test
 def _pad_rules(n=80):
     return "\n".join(
         f"rule=f{i}:filler{i}: %v:number%" for i in range(n))
