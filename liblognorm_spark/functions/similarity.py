@@ -70,18 +70,19 @@ def _fold(terms: int, per_plan: bool = False) -> bool:
     return per_plan or terms > UNROLL_MAX_TERMS
 
 
-def _guard(body: str, dim: int, *vecs: str) -> str:
+def _guard(body: str, dim: int, *vecs) -> str:
     """``body`` times 1 when every vector column in ``vecs`` has exactly
-    ``dim`` elements, else times NULL — the vector-length contract, the
-    same on both forms.  Unguarded, the unrolled chain raised
-    INVALID_ARRAY_INDEX on a shorter vector under ANSI mode (element
-    reads now use get(), NULL out of range) and silently read the first
-    dim elements of a longer one, while the literal fold null-padded both
-    to NULL.  A factor, not a CASE around ``body``: inside a conditional
-    branch codegen no longer shares a cosine's repeated norms, which
-    pushed the batch ranking stage past the 64 KB method limit; x * 1 is
-    x exactly for every double and int."""
-    sizes = " AND ".join(f"size({v}) = {dim}" for v in vecs)
+    ``dim`` elements (a literal list among them is skipped), else times
+    NULL — the vector-length contract, the same on both forms.
+    Unguarded, the unrolled chain raised INVALID_ARRAY_INDEX on a shorter
+    vector under ANSI mode (element reads now use get(), NULL out of
+    range) and silently read the first dim elements of a longer one,
+    while the literal fold null-padded both to NULL.  A factor, not a
+    CASE around ``body``: inside a conditional branch codegen no longer
+    shares a cosine's repeated norms, which pushed the batch ranking
+    stage past the 64 KB method limit; x * 1 is x exactly for every
+    double and int."""
+    sizes = " AND ".join(f"size({v}) = {dim}" for v in vecs if isinstance(v, str))
     return f"({body} * (CASE WHEN {sizes} THEN 1 END))"
 
 
@@ -119,7 +120,7 @@ def dot_sql(a: str, b, dim: int, fold: bool | None = None) -> str:
     NULL on both (see _guard)."""
     if fold is None:
         fold = _fold(dim)
-    return _guard(_dot(a, b, dim, fold), dim, *([a, b] if isinstance(b, str) else [a]))
+    return _guard(_dot(a, b, dim, fold), dim, a, b)
 
 
 def norm_sql(a: str, dim: int, fold: bool | None = None) -> str:
@@ -147,7 +148,7 @@ def cos_sql(a: str, b, dim: int, na: str | None = None, nb: str | None = None,
     inline_norms = (na is None) + (isinstance(b, str) and nb is None)
     if fold is None:  # the CASE reads each inline norm twice
         fold = _fold(dim * (1 + 2 * inline_norms))
-    zero_cos = _guard("cast(0.0 as double)", dim, *([a, b] if isinstance(b, str) else [a]))
+    zero_cos = _guard("cast(0.0 as double)", dim, a, b)
     na = na or norm_sql(a, dim, fold)
     if isinstance(b, str):
         nb = nb or norm_sql(b, dim, fold)
