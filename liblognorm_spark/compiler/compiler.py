@@ -31,7 +31,7 @@ from typing import Callable, Optional
 from liblognorm_spark.compiler import motifs as M
 from liblognorm_spark.compiler.motifs import Reject
 from liblognorm_spark.rulebase.loader import Alt, PNode, Rule, Rulebase
-from liblognorm_spark.runtime.walker import WalkState, attach, walk_seq
+from liblognorm_spark.runtime.walker import WalkState, _merge_key, attach
 
 RE_SP = r"[ \t\n\v\f\r]"
 OCTET = r"(?:[01][0-9]{2}|2[0-4][0-9]|25[0-5]|[0-9]{1,2})(?![0-9])"
@@ -242,17 +242,15 @@ def _flat_literal(seq):
 
 
 def _head_merge_key(seq):
-    """PDAG merge identity of a seq's first item (walker._merge_key twin) —
-    used to detect shared-prefix type alternatives the regex path cannot
-    emulate."""
+    """PDAG merge identity of a seq's first item (walker._merge_key for a
+    parser) — used to detect shared-prefix type alternatives the regex path
+    cannot emulate."""
     if not seq:
         return ("empty",)
     it = seq[0]
     if isinstance(it, Alt):
         return ("alt", id(it))
-    if it.ptype == "literal" and it.name is None:
-        return ("lit", it.params.get("text", "")[:1], None)
-    return (it.ptype, it.name, repr(sorted(it.params.items(), key=lambda kv: kv[0])))
+    return _merge_key(it)
 
 
 def _item_fragment(item, ctx: _Ctx, specs: list, capture: bool) -> str:
@@ -342,8 +340,6 @@ class CompiledRule:
     rule: Rule
     pattern: Optional[re.Pattern]  # None -> walker-only rule
     specs: list  # list[FieldSpec]
-    prefilter: str  # literal prefix for cheap vectorized candidate filtering
-    frag: str = ""  # the raw fragment (for master-alternation assembly)
     order: int = 0
     # constant per-rule event fields: event.tags + tag annotations
     extra_fields: dict = field(default_factory=dict)
@@ -365,17 +361,9 @@ class CompiledRule:
         return self.rule.tags
 
 
-def _literal_prefix(seq) -> str:
-    if seq and isinstance(seq[0], PNode) and seq[0].ptype == "literal":
-        return seq[0].params["text"]
-    return ""
-
-
-def compile_rule(rule: Rule, types: dict, ctx: _Ctx | None = None) -> CompiledRule:
-    """`ctx` may be shared across rules so group names stay unique inside a
+def compile_rule(rule: Rule, ctx: _Ctx) -> CompiledRule:
+    """`ctx` is shared across rules so group names stay unique inside a
     master alternation."""
-    if ctx is None:
-        ctx = _Ctx(types)
     ctx.regexable = True
     specs: list = []
     frag = _seq_fragment(rule.seq, ctx, specs, capture=True)
@@ -389,8 +377,6 @@ def compile_rule(rule: Rule, types: dict, ctx: _Ctx | None = None) -> CompiledRu
         rule=rule,
         pattern=pattern,
         specs=specs if pattern is not None else [],
-        prefilter=_literal_prefix(rule.seq),
-        frag=frag if pattern is not None else "",
     )
 
 
@@ -447,27 +433,26 @@ class _TrieNode:
         self.ins = ins
         self.terminals: list = []
 
-
-def _expand_items(seq):
-    """Literals split per char so rules share prefixes mid-literal, exactly
-    like the PDAG's one-node-per-char loading (src/samp.c:320-325)."""
-    for item in seq:
-        if isinstance(item, PNode) and item.ptype == "literal" and item.name is None:
-            for ch in item.params["text"]:
-                yield PNode(ptype="literal", name=None, params={"text": ch},
-                            user_prio=item.user_prio)
-        else:
-            yield item  # named literals keep their capture; Alt/customs opaque
+    def ordered(self) -> list:
+        """Children in PDAG branch order: combined priority, insertion
+        order as tie-break (src/pdag.c:378-398)."""
+        return sorted(self.children.values(), key=lambda c: (c.item.prio, c.ins))
 
 
-def _edge_key(item):
-    if isinstance(item, Alt):
-        ident = _json.dumps(
-            [[_node_ident(n) for n in s if isinstance(n, PNode)] for s in item.alts],
-            sort_keys=True,
-        )
-        return (item.prio, "alt:" + ident)
-    return (item.prio, _node_ident(item))
+def _edge_trie(entries) -> _TrieNode:
+    """(rule, terminal) pairs -> the prefix-shared trie over the rules'
+    PDAG edges (:func:`_token_stream`); each terminal is recorded at its
+    rule's last edge, in entry order."""
+    root = _TrieNode()
+    for rule, terminal in entries:
+        node = root
+        for k, item in _token_stream(rule):
+            child = node.children.get(k)
+            if child is None:
+                child = node.children[k] = _TrieNode(item=item, ins=len(node.children))
+            node = child
+        node.terminals.append(terminal)
+    return root
 
 
 def _is_plain_lit(item) -> bool:
@@ -489,9 +474,7 @@ class MatchCohort:
     pattern: re.Pattern = None  # type: ignore[assignment]
     by_marker: dict = None  # type: ignore[assignment]  # group index -> ExtractPlan
 
-    def build(self, ctx: "_Ctx" = None, types: dict | None = None):
-        if ctx is None:
-            ctx = _Ctx(types or {})
+    def build(self, ctx: _Ctx):
         # the ctx is shared across the whole rulebase compile: a preceding
         # WALKER-ONLY rule leaves regexable=False, and _item_fragment then
         # returns "" for custom-type nodes — silently DROPPING them from
@@ -499,18 +482,6 @@ class MatchCohort:
         # vanished, matching inputs the rule must reject).  Every rule in
         # this cohort already compiled regexable, so reset and re-assert.
         ctx.regexable = True
-        root = _TrieNode()
-        for cr in self.rules:
-            node = root
-            for item in _expand_items(cr.rule.seq):
-                k = _edge_key(item)
-                child = node.children.get(k)
-                if child is None:
-                    child = _TrieNode(item=item, ins=len(node.children))
-                    node.children[k] = child
-                node = child
-            node.terminals.append(cr)
-
         path_of: dict = {}  # marker name order -> (rule, specs on its path)
         path_specs: list = []
 
@@ -520,7 +491,7 @@ class MatchCohort:
                 cr = node.terminals[0]  # duplicates coalesce: first wins
                 path_of[cr.order] = (cr, list(path_specs))
                 parts.append(f"(?P<R{cr.order}>)")
-            for child in sorted(node.children.values(), key=lambda c: (_edge_key(c.item)[0], c.ins)):
+            for child in node.ordered():
                 # compact single-child unnamed-literal chains (the PDAG's
                 # literal path compaction, src/pdag.c:345-375)
                 lits = []
@@ -551,7 +522,7 @@ class MatchCohort:
                 return parts[0]
             return "(?:" + "|".join(parts) + ")"
 
-        pattern_src = emit(root)
+        pattern_src = emit(_edge_trie((cr.rule, cr) for cr in self.rules))
         if not ctx.regexable:
             raise AssertionError(
                 "cohort fragment rebuild turned non-regexable for rules "
@@ -580,22 +551,26 @@ class MatchCohort:
 
 
 def _token_stream(rule: Rule):
-    """Rule -> tokens for trie ordering: literals expand per-char
-    (src/samp.c:320-325: one PDAG node per literal char)."""
-    out = []
+    """Rule -> its PDAG edges as (trie key, item) pairs, the one edge
+    identity of rule ordering and cohort tries.  Unnamed literals expand
+    to one single-char literal edge per char, so rules share prefixes
+    mid-literal exactly like the PDAG's one-node-per-char loading
+    (src/samp.c:320-325); named literals keep their capture, and Alt and
+    custom-type items stay opaque."""
     for item in rule.seq:
         if isinstance(item, Alt):
             ident = _json.dumps(
                 [[_node_ident(n) for n in s if isinstance(n, PNode)] for s in item.alts],
                 sort_keys=True,
             )
-            out.append((item.prio, "alt:" + ident))
+            yield (item.prio, "alt:" + ident), item
         elif item.ptype == "literal" and item.name is None:
             for ch in item.params["text"]:
-                out.append((item.prio, "lit:" + ch))
+                yield (item.prio, "lit:" + ch), PNode(
+                    ptype="literal", name=None, params={"text": ch},
+                    user_prio=item.user_prio)
         else:
-            out.append((item.prio, _node_ident(item)))
-    return out
+            yield (item.prio, _node_ident(item)), item
 
 
 def _node_ident(n: PNode) -> str:
@@ -606,15 +581,6 @@ def _node_ident(n: PNode) -> str:
 def order_rules(rules: list[Rule]) -> list[int]:
     """Return rule_ids in PDAG first-match order: DFS over the shared-prefix
     trie with children sorted by (combined priority, insertion order)."""
-    root: dict = {"children": {}, "rules": []}
-    for idx, rule in enumerate(rules):
-        node = root
-        for tok in _token_stream(rule):
-            key = tok
-            if key not in node["children"]:
-                node["children"][key] = {"children": {}, "rules": [], "ins": len(node["children"])}
-            node = node["children"][key]
-        node["rules"].append(idx)
     # Preorder: a terminal rule at a node is emitted before longer rules
     # through that node.  The reference accepts a terminal only at EOS
     # (src/pdag.c:1608-1612) and that acceptance overrides any child match
@@ -622,14 +588,12 @@ def order_rules(rules: list[Rule]) -> list[int]:
     # fullmatch-anchored regexes make the two mutually exclusive otherwise.
     order: list[int] = []
 
-    def dfs(node):
-        order.extend(node["rules"])
-        for _key, child in sorted(
-            node["children"].items(), key=lambda kv: (kv[0][0], kv[1]["ins"])
-        ):
+    def dfs(node: _TrieNode):
+        order.extend(node.terminals)
+        for child in node.ordered():
             dfs(child)
 
-    dfs(root)
+    dfs(_edge_trie((rule, idx) for idx, rule in enumerate(rules)))
     return order
 
 
@@ -652,7 +616,7 @@ def compile_rulebase(rb: Rulebase) -> CompiledRulebase:
     compiled = []
     ctx = _Ctx(rb.types)
     for pos, idx in enumerate(order):
-        cr = compile_rule(rb.rules[idx], rb.types, ctx)
+        cr = compile_rule(rb.rules[idx], ctx)
         cr.order = pos
         cr.finish(rb.annotations)
         compiled.append(cr)
@@ -669,7 +633,7 @@ def compile_rulebase(rb: Rulebase) -> CompiledRulebase:
         nonlocal run
         for i in range(0, len(run), MAX_COHORT_RULES):
             chunk = run[i : i + MAX_COHORT_RULES]
-            cohorts.append(MatchCohort(rules=chunk).build(ctx, rb.types))
+            cohorts.append(MatchCohort(rules=chunk).build(ctx))
         run = []
 
     for cr in compiled:

@@ -23,6 +23,7 @@ from __future__ import annotations
 import json as _json
 import os
 from dataclasses import dataclass, field
+from functools import cached_property
 from typing import Any, Optional, Union
 
 from liblognorm_spark.rulebase.reader import read_logical_lines
@@ -187,6 +188,16 @@ class Rule:
     rb_file: str = "--"
     rb_line: int = 0
     raw: str = ""
+
+    @cached_property
+    def leading_literal(self) -> str:
+        """The text of the rule's first item when that is a non-empty,
+        unnamed literal, else "" (none): a named literal captures a field,
+        so it is not a shared PDAG literal path."""
+        seq = self.seq
+        if seq and isinstance(seq[0], PNode) and seq[0].ptype == "literal" and seq[0].name is None:
+            return seq[0].params.get("text", "")
+        return ""
 
 
 @dataclass

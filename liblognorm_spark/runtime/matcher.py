@@ -11,18 +11,21 @@ Execution model (the Spark-first replacement for the reference's per-message
   this order:
 
   1. route (:func:`_route`): factorize the rows' 16-char prefixes, then
-     one memoized dispatch + fold lookup per distinct prefix;
+     one memoized dispatch + fold lookup per distinct prefix, both
+     answered by ONE char trie over the rules' leading literals
+     (:class:`_PrefixIndex`, which also serves stage 5's candidates);
   2. sole-rule fold (:func:`_fold_stage`): rows whose prefix proves a
      single candidate rule match that rule's own pattern;
-  3. cohort fullmatch (:func:`_cohort_stage`): ONE anchored fullmatch per
-     row against each prefix-compatible trie-factored cohort pattern
-     (prefix sharing + priority branch order, the PDAG discipline); the
-     matched rule is identified by its marker group via ``lastindex``;
+  3. cohort fullmatch: ONE anchored fullmatch per row against each
+     prefix-compatible trie-factored cohort pattern (prefix sharing +
+     priority branch order, the PDAG discipline); the matched rule is
+     identified by its marker group via ``lastindex``;
   4. walker-only rules (:func:`_walker_rule_stage`), interleaved with
-     stage 3 in rule priority order;
+     stage 3 in rule priority order; both take the rows the route sent
+     to their cohort position (:func:`_routed_rows`);
   5. walker fallback (:func:`_fallback_stage`): rows whose regex match
      failed value-dependent validation (Reject) and rows matching nothing
-     take the exact-semantics walker over a prefix-indexed candidate set,
+     take the exact-semantics walker over the prefix index's candidates,
      which also produces the ``unparsed-data`` longest-parse diagnostics;
   6. frame assembly (:func:`_frame`).
 
@@ -37,7 +40,6 @@ struct-returning scalar pandas_udf (``normalize_df``) over Arrow batches.
 
 from __future__ import annotations
 
-import bisect
 import json as _json
 
 import numpy as np
@@ -55,10 +57,8 @@ from liblognorm_spark.rulebase.loader import Rulebase
 from liblognorm_spark.runtime.walker import (
     WalkState,
     attach,
-    flat_items,
     normalize_message,
-    walk_flat,
-    walk_seq,
+    walk_rule,
 )
 
 # normalize_df's match-result columns, in output order (DDL form)
@@ -89,58 +89,7 @@ except ImportError:  # pragma: no cover
     _dumps = _dumps_std
 
 
-def _fallback_index(crb: CompiledRulebase):
-    """Char-trie over leading-literal prefixes for the walker fallback:
-    candidates(text) = rules whose prefix prefixes the text, in priority
-    order, plus rules without a leading literal.  Cached on the rulebase."""
-    idx = getattr(crb, "_fb_index", None)
-    if idx is not None:
-        return idx
-    from liblognorm_spark.rulebase.loader import PNode
-
-    root: dict = {}
-    always: list = []
-    order_of: dict = {}
-    for pos, rule in enumerate(crb.ordered_rules):
-        order_of[id(rule)] = pos
-        seq = rule.seq
-        pref = ""
-        if seq and isinstance(seq[0], PNode) and seq[0].ptype == "literal" and seq[0].name is None:
-            pref = seq[0].params["text"]
-        if not pref:
-            always.append(rule)
-            continue
-        node = root
-        for ch in pref:
-            node = node.setdefault(ch, {})
-        node.setdefault("\0rules", []).append(rule)
-
-    def candidates(text: str):
-        """Returns (rules, lit_credit): candidate rules in priority order
-        plus the trie descent depth — the max common prefix between the
-        text and ANY leading literal, i.e. the parsedTo credit the pruned
-        rules' per-char literal nodes would have produced (the reference
-        credits partial literal progress; see walker._literal_partial_credit)."""
-        found = list(always)
-        node = root
-        depth = 0
-        for ch in text:
-            node = node.get(ch)
-            if node is None:
-                break
-            depth += 1
-            rs = node.get("\0rules")
-            if rs:
-                found.extend(rs)
-        if len(found) > 1:
-            found.sort(key=lambda r: order_of[id(r)])
-        return found, depth
-
-    crb._fb_index = candidates
-    return candidates
-
-
-_DISPATCH_MAX_DEPTH = 16  # leading-literal chars indexed per rule
+_DISPATCH_MAX_DEPTH = 16  # leading-literal chars that route a row
 # cross-batch unmatched-diagnostics memo bounds: entry count AND total key
 # bytes (webtext rows can be multi-KB; a count-only cap could hold
 # hundreds of MB per worker)
@@ -149,72 +98,141 @@ _FB_MEMO_MAX_BYTES = 32 << 20
 _EMPTY_SET: frozenset = frozenset()
 
 
-def _cohort_dispatch(crb: CompiledRulebase):
-    """Char-trie over the leading literals of every regexable rule, mapping
-    a message to the SET of cohort positions that could possibly match it.
+class _Node:
+    """One char of the prefix index: the rules whose leading literal ends
+    here (priority order), the cohort ids routed by the path (kept within
+    the first _DISPATCH_MAX_DEPTH chars) and the rule count of the subtree."""
 
-    Without this, a row scans every cohort pattern sequentially (O(R/64)
-    regex calls per row — the measured scale cliff at 512-2048 rules).
-    With it, a row descends the trie once (~prefix-length dict hops) and
-    tries only prefix-compatible cohorts; cohorts containing any rule
-    without a plain leading literal are 'wildcard' and always tried.
-    Cohort ORDER is preserved (candidates are emitted sorted by cohort
-    position), so first-match-wins semantics are untouched.  Cached on the
-    compiled rulebase."""
-    cached = getattr(crb, "_dispatch", None)
-    if cached is not None:
-        return cached
-    from liblognorm_spark.rulebase.loader import PNode
+    __slots__ = ("kids", "rules", "cum", "count")
 
-    root: dict = {}
-    wildcard: list[int] = []
-    for ci, cohort in enumerate(crb.cohorts):
-        if not isinstance(cohort, MatchCohort):
-            continue  # walker-only rules keep their own prefilter path
-        is_wild = False
-        prefixes = set()
-        for cr in cohort.rules:
-            seq = cr.rule.seq
-            if (seq and isinstance(seq[0], PNode) and seq[0].ptype == "literal"
-                    and seq[0].name is None and seq[0].params.get("text")):
-                prefixes.add(seq[0].params["text"][:_DISPATCH_MAX_DEPTH])
+    def __init__(self):
+        self.kids: dict = {}
+        self.rules: list = []
+        self.cum = _EMPTY_SET
+        self.count = 0
+
+
+class _PrefixIndex:
+    """ONE char trie over every rule's :attr:`Rule.leading_literal`, the
+    matcher's counterpart of the PDAG's shared literal prefix
+    (doc/pdag_implementation_model.rst:13-24).  It answers the matcher's
+    three routing questions: the walker fallback's :meth:`candidates`, a
+    prefix's cohort :meth:`dispatch` and the :meth:`sole` rule a prefix
+    leaves possible (the fold, see :func:`_fold_entry`)."""
+
+    def __init__(self, crb: CompiledRulebase):
+        self.root = _Node()
+        self.crs = crb.rules  # CompiledRules in priority order
+        self.order_of: dict = {}  # id(Rule) -> priority position
+        self.always: list = []  # rules without a leading literal: never pruned
+        # a cohort position (a MatchCohort or one walker-only rule) holding
+        # a rule without a leading literal can match any message, so it is
+        # tried for every row instead of being routed
+        wild, cohort_of = set(), {}
+        for ci, cohort in enumerate(crb.cohorts):
+            crs = cohort.rules if isinstance(cohort, MatchCohort) else [cohort]
+            if all(cr.rule.leading_literal for cr in crs):
+                cohort_of.update((id(cr.rule), ci) for cr in crs)
             else:
-                is_wild = True
-        if is_wild:
-            wildcard.append(ci)
-            continue
-        for pref in prefixes:
-            node = root
-            for ch in pref:
-                node = node.setdefault(ch, {})
-            node.setdefault("\0c", set()).add(ci)
+                wild.add(ci)
+        self.wild_cohorts = frozenset(wild)
+        routes: dict = {}  # _Node -> ids of the cohorts routed there
+        for pos, cr in enumerate(crb.rules):
+            rule, lit = cr.rule, cr.rule.leading_literal
+            self.order_of[id(rule)] = pos
+            if not lit:
+                self.always.append(rule)
+                continue
+            node = self.root
+            node.count += 1
+            for depth, ch in enumerate(lit, 1):
+                node = node.kids.get(ch) or node.kids.setdefault(ch, _Node())
+                node.count += 1
+                # a literal longer than the window routes by its head
+                if depth == min(len(lit), _DISPATCH_MAX_DEPTH) and id(rule) in cohort_of:
+                    routes.setdefault(node, set()).add(cohort_of[id(rule)])
+            node.rules.append(rule)
 
-    # propagate cumulative candidate sets down the trie so a descent does
-    # ZERO set unions — each node stores the union over its whole path
-    # (ancestor sets are shared objects when a node adds nothing new)
-    def _propagate(node: dict, inherited: frozenset):
-        own = node.get("\0c")
-        cum = (inherited | own) if own else inherited
-        node["\0cum"] = cum
-        for k, child in node.items():
-            if k not in ("\0c", "\0cum"):
-                _propagate(child, cum)
+        # each node in the window stores the union over its path, so a
+        # dispatch descent does ZERO set unions (ancestor sets are shared
+        # objects when a node routes nothing new)
+        def spread(node: _Node, inherited: frozenset, depth: int) -> None:
+            own = routes.get(node)
+            node.cum = (inherited | own) if own else inherited
+            if depth < _DISPATCH_MAX_DEPTH:
+                for kid in node.kids.values():
+                    spread(kid, node.cum, depth + 1)
 
-    _propagate(root, frozenset())
+        spread(self.root, _EMPTY_SET, 0)
 
-    def dispatch(text: str):
-        """Cohort positions whose rule literals prefix `text` (unsorted)."""
-        node = root
-        cum = _EMPTY_SET
-        for ch in text[:_DISPATCH_MAX_DEPTH]:
-            node = node.get(ch)
+    def candidates(self, text: str):
+        """Returns (rules, lit_credit): the rules whose leading literal
+        prefixes `text` or that have none, in priority order, plus the
+        descent depth — the max common prefix between the text and ANY
+        leading literal, i.e. the parsedTo credit the pruned rules'
+        per-char literal nodes would have produced (the reference credits
+        partial literal progress; see walker._literal_partial_credit)."""
+        found = list(self.always)
+        node = self.root
+        depth = 0
+        for ch in text:
+            node = node.kids.get(ch)
             if node is None:
                 break
-            cum = node["\0cum"]
+            depth += 1
+            if node.rules:
+                found.extend(node.rules)
+        if len(found) > 1:
+            order_of = self.order_of
+            found.sort(key=lambda r: order_of[id(r)])
+        return found, depth
+
+    def dispatch(self, u: str) -> frozenset:
+        """Cohort positions whose leading literals, cut to the window,
+        prefix `u` (unsorted; wildcard cohorts are not included).  A row
+        tries only these instead of every cohort pattern (O(R/64) regex
+        calls per row, the measured scale cliff at 512-2048 rules);
+        match_batch still runs them in cohort order, so first-match-wins
+        holds."""
+        node = self.root
+        cum = _EMPTY_SET
+        for ch in u[:_DISPATCH_MAX_DEPTH]:
+            node = node.kids.get(ch)
+            if node is None:
+                break
+            cum = node.cum
         return cum
 
-    crb._dispatch = (dispatch, frozenset(wildcard))
-    return crb._dispatch
+    def sole(self, u: str):
+        """The CompiledRule of the one rule whose leading literal prefixes
+        `u` (it ends on u's path) or extends it (it ends below u's node),
+        else None.  A rule without a leading literal can match anything,
+        so then no prefix has a sole rule."""
+        if self.always:
+            return None
+        node = self.root
+        found: list = []
+        for ch in u:
+            node = node.kids.get(ch)
+            if node is None:
+                break
+            found += node.rules
+        else:  # u lies on the trie: count the literals that extend it too
+            if len(found) + node.count - len(node.rules) != 1:
+                return None
+            if not found:  # the one literal below u: follow its path down
+                while not node.rules:
+                    (node,) = node.kids.values()
+                found = node.rules
+        return self.crs[self.order_of[id(found[0])]] if len(found) == 1 else None
+
+
+def _prefix_index(crb: CompiledRulebase) -> _PrefixIndex:
+    """The rulebase's prefix index, built on first use and cached on it."""
+    idx = getattr(crb, "_prefix_idx", None)
+    if idx is None:
+        idx = crb._prefix_idx = _PrefixIndex(crb)
+    return idx
 
 
 _DISPATCH_MEMO_MAX = 65536
@@ -234,38 +252,14 @@ def _dispatch_memo(crb: CompiledRulebase) -> dict:
     return memo
 
 
-def _fold_index(crb: CompiledRulebase):
-    """prefilter -> [CompiledRule] map + sorted prefilter list, cached on
-    the rulebase.  `wildcard` is True when ANY rule has no literal prefix
-    (leading motif / alternative): such a rule is prefix-compatible with
-    every message, so no prefix can ever prove a sole candidate and the
-    fold is disabled globally (the check is one cached-tuple read)."""
-    idx = getattr(crb, "_fold_idx", None)
-    if idx is None:
-        by_pref: dict = {}
-        wildcard = False
-        for cr in crb.rules:
-            p = cr.prefilter
-            if not p:
-                wildcard = True
-            by_pref.setdefault(p, []).append(cr)
-        sorted_prefs = sorted(by_pref) if not wildcard else []
-        # only the literal-prefix lengths that actually occur need probing
-        # (real rulebases have a handful); scanning every 1..len(u) cut
-        # prefix cost the cold path can't afford
-        pref_lens = sorted({len(p) for p in by_pref})
-        idx = crb._fold_idx = (by_pref, sorted_prefs, wildcard, pref_lens)
-    return idx
-
-
 def _fold_entry(crb: CompiledRulebase, u: str):
-    """If the dispatch prefix `u` PROVES (by literal-prefix analysis over
-    the whole rulebase) that exactly one rule can match any text starting
-    with `u`, return that rule's own ExtractPlan (over its own pattern);
-    else None.
+    """If the dispatch prefix `u` PROVES (by leading-literal analysis over
+    the whole rulebase, :meth:`_PrefixIndex.sole`) that exactly one rule can
+    match any text starting with `u`, return that rule's own ExtractPlan
+    (over its own pattern); else None.
 
-    Soundness: a rule is counted compatible with `u` when its literal
-    prefix is a prefix of `u` (motifs could match anything after it) or
+    Soundness: a rule is counted compatible with `u` when its leading
+    literal is a prefix of `u` (motifs could match anything after it) or
     extends `u` (u is the truncated dispatch window).  That over-counts —
     never under-counts — so a fold only exists when NO other rule could
     possibly match, making rule-priority order irrelevant for these rows:
@@ -274,33 +268,9 @@ def _fold_entry(crb: CompiledRulebase, u: str):
     match anyway.  This is the round-5 large-rulebase lever: with 8192
     distinct program-name rules, the cohort pattern still carries a 64-way
     branch per row; the sole-rule pattern does not."""
-    by_pref, sorted_prefs, wildcard, pref_lens = _fold_index(crb)
-    if wildcard or not u:
-        return None
-    cands: list = []
-    lu = len(u)
-    for L in pref_lens:
-        if L > lu:
-            break
-        rs = by_pref.get(u[:L])
-        if rs:
-            cands.extend(rs)
-            if len(cands) > 1:
-                return None
-    lo = bisect.bisect_left(sorted_prefs, u)
-    for i in range(lo, len(sorted_prefs)):
-        p = sorted_prefs[i]
-        if not p.startswith(u):
-            break
-        if len(p) > len(u):  # == u already counted in the loop above
-            cands.extend(by_pref[p])
-            if len(cands) > 1:
-                return None
-    if len(cands) != 1:
-        return None
-    cr = cands[0]
-    if cr.pattern is None:
-        return None  # walker-only sole rule: keep the exact walker path
+    cr = _prefix_index(crb).sole(u)
+    if cr is None or cr.pattern is None:
+        return None  # no sole rule, or a walker-only one: keep the exact walker path
     # the plan is per-RULE, not per-prefix: cache it so the many prefixes
     # that map to one rule (sshd[1], sshd[2], ... with a 16+ char dispatch
     # window) build it once
@@ -326,7 +296,7 @@ def _exec_path_of(crb: CompiledRulebase, rule) -> str:
         cache = crb._exec_paths = {}
     s = cache.get(rule.rule_id)
     if s is None:
-        from liblognorm_spark.rulebase.loader import Alt, PNode
+        from liblognorm_spark.rulebase.loader import Alt
 
         toks: list[str] = []
         nlit = 0
@@ -355,7 +325,6 @@ class _Batch:
     def __init__(self, crb: CompiledRulebase, texts: pd.Series, decorate):
         n = len(texts)
         self.crb = crb
-        self.texts = texts
         self.tvals = texts.to_numpy(dtype=object)
         self.decorate = decorate  # None on the no-options (Spark) path
         self.rule_id: list = [-1] * n
@@ -420,7 +389,7 @@ def _route(b: _Batch):
     rows = np.flatnonzero(b.remaining)
     if not len(rows):
         return folds, cohort_rows
-    dispatch, _ = _cohort_dispatch(crb)
+    dispatch = _prefix_index(crb).dispatch
     dmemo = _dispatch_memo(crb)
     dmemo_get = dmemo.get
     room = _DISPATCH_MEMO_MAX - len(dmemo)
@@ -544,38 +513,25 @@ def _fold_stage(b: _Batch, folds: list) -> None:
         _match_rows(b, rows, plan, None)
 
 
-def _cohort_stage(b: _Batch, cohort: MatchCohort, parts: list | None,
-                  wild: bool) -> None:
-    """Stage 3, one cohort: its routed rows (all unsettled rows for a
-    wildcard cohort, one holding a rule without a plain leading literal)
-    that no earlier stage settled."""
+def _routed_rows(b: _Batch, parts: list | None, wild: bool) -> list:
+    """Stages 3 and 4, one cohort position: the rows the route sent to it
+    (every row for a wildcard position, one holding a rule without a
+    leading literal) that no earlier stage settled."""
     if wild:
-        rows = np.flatnonzero(b.remaining).tolist()
-    elif parts:
-        arr = parts[0] if len(parts) == 1 else np.concatenate(parts)
-        rows = arr[b.remaining[arr]].tolist()
-    else:
-        return
-    _match_rows(b, rows, None, cohort)
+        return np.flatnonzero(b.remaining).tolist()
+    if not parts:
+        return []
+    arr = parts[0] if len(parts) == 1 else np.concatenate(parts)
+    return arr[b.remaining[arr]].tolist()
 
 
-def _walker_rule_stage(b: _Batch, cr) -> None:
-    """Stage 4, one walker-only rule: exact per-row walk over the unsettled
-    rows its literal prefix admits."""
-    if cr.prefilter:
-        pref = b.texts.str.startswith(cr.prefilter, na=False).to_numpy()
-        rows = np.flatnonzero(b.remaining & pref).tolist()
-    else:
-        rows = np.flatnonzero(b.remaining).tolist()
+def _walker_rule_stage(b: _Batch, cr, rows: list) -> None:
+    """Stage 4, one walker-only rule: exact per-row walk over its rows."""
     types = b.crb.types
-    flat = flat_items(cr.rule)
     for pos in rows:
         t = b.tvals[pos]
-        st = WalkState(text=t, strlen=len(t), types=types)
         ev: dict = {}
-        ok = (walk_flat(st, flat, ev) if flat is not None
-              else walk_seq(st, cr.rule.seq, 0, 0, False, ev, None))
-        if ok:
+        if walk_rule(WalkState(text=t, strlen=len(t), types=types), cr.rule, ev):
             if cr.extra_fields:
                 ev.update(cr.extra_fields)
             if b.decorate is not None:
@@ -604,7 +560,7 @@ def _fallback_stage(b: _Batch) -> None:
     unmatched share, a net loss on typical streams where unparsed rows are
     <5%.)"""
     crb = b.crb
-    index = _fallback_index(crb)
+    candidates = _prefix_index(crb).candidates
     if b.decorate is not None:
         fb_memo: dict = {}
         fb_bytes = 0
@@ -619,7 +575,7 @@ def _fallback_stage(b: _Batch) -> None:
         t = b.tvals[pos]
         res = fb_memo.get(t)
         if res is None:
-            cand_rules, lit_credit = index(t)
+            cand_rules, lit_credit = candidates(t)
             rule, ev, pto = normalize_message(
                 cand_rules, t, crb.types, crb.annotations,
                 initial_parsed_to=lit_credit, v1_engine=crb.version == 1,
@@ -679,15 +635,16 @@ def match_batch(crb: CompiledRulebase, texts: pd.Series,
                                       add_rule_mockup, add_exec_path))
     folds, cohort_rows = _route(b)
     _fold_stage(b, folds)
-    _, wild_cohorts = _cohort_dispatch(crb)
+    wild_cohorts = _prefix_index(crb).wild_cohorts
     # stages 3 and 4 run in rule priority order: first match wins
     for ci, cohort in enumerate(crb.cohorts):
         if not b.remaining.any():
             break
+        rows = _routed_rows(b, cohort_rows.get(ci), ci in wild_cohorts)
         if isinstance(cohort, MatchCohort):
-            _cohort_stage(b, cohort, cohort_rows.get(ci), ci in wild_cohorts)
+            _match_rows(b, rows, None, cohort)
         else:
-            _walker_rule_stage(b, cohort)
+            _walker_rule_stage(b, cohort, rows)
     _fallback_stage(b)
     return _frame(b)
 

@@ -9,17 +9,15 @@ bottom-up with the ``fixJSON`` naming rules (src/pdag.c:1320-1389).
 
 This is the slow path: it runs per row only for (a) rows that match no
 vectorized rule regex (to compute the unparsed suffix), (b) rules
-containing non-regexable motifs (json, cef, ...) after a cheap regex
-prefilter, and (c) rows whose regex match failed value-dependent
-post-validation.
+containing non-regexable motifs (json, cef, ...) after a cheap
+leading-literal prefilter, and (c) rows whose regex match failed
+value-dependent post-validation.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from liblognorm_spark.compiler.motifs import NO_VALUE, PARSERS, coerce_value
-from liblognorm_spark.rulebase.loader import Alt, PNode, Rule
+from liblognorm_spark.rulebase.loader import Alt, PNode, first_prio
 
 
 class WalkState:
@@ -78,7 +76,7 @@ def try_parser(state: WalkState, node: PNode, offs: int):
             #    over every branch tried, successful or NOT (and parsedTo is
             #    global: prior progress past offs also counts).
             child: dict = {}
-            branches = [(s, 0, None) for s in sorted(alts, key=_seq_prio_key)]
+            branches = [(s, 0, None) for s in sorted(alts, key=first_prio)]
             ok = _walk_merged(state, branches, offs, child)
             if not ok:
                 return (False, 0, None)
@@ -101,16 +99,12 @@ def try_parser(state: WalkState, node: PNode, offs: int):
         state.parsed_to = saved
 
 
-def _seq_prio_key(seq):
-    return seq[0].prio if seq else (30000 << 8) | 16
-
-
 def _sorted_alts(item: Alt):
     """Priority-sorted alternative branches, cached on the Alt node (the
     sort is stable in rule order and the node is immutable after load)."""
     cached = getattr(item, "_sorted_cache", None)
     if cached is None:
-        cached = item._sorted_cache = sorted(item.alts, key=_seq_prio_key)
+        cached = item._sorted_cache = sorted(item.alts, key=first_prio)
     return cached
 
 
@@ -364,28 +358,13 @@ def walk_flat(state: WalkState, items, json_out: dict | None) -> bool:
     return True
 
 
-def match_rule(rule: Rule, text: str, types: dict, state: WalkState | None = None):
-    """Try one rule against `text`.  Returns fields dict or None.
-
-    `state` carries parsedTo across rules of the same message so the
-    unparsed suffix reflects the global longest parse (src/pdag.c:1299)."""
-    if state is None:
-        state = WalkState(text=text, strlen=len(text), types=types)
-    fields: dict = {}
-    if walk_seq(state, rule.seq, 0, 0, False, fields, None):
-        return fields
-    return None
-
-
-def _lit_prefix(rule) -> str:
-    pref = getattr(rule, "_lit_prefix_cache", None)
-    if pref is None:
-        seq = rule.seq
-        pref = ""
-        if seq and isinstance(seq[0], PNode) and seq[0].ptype == "literal" and seq[0].name is None:
-            pref = seq[0].params["text"]
-        rule._lit_prefix_cache = pref
-    return pref
+def walk_rule(state: WalkState, rule, json_out: dict) -> bool:
+    """Walk one whole rule over ``state.text`` (the flat walk when the rule
+    has one, see :func:`flat_items`)."""
+    flat = flat_items(rule)
+    if flat is not None:
+        return walk_flat(state, flat, json_out)
+    return walk_seq(state, rule.seq, 0, 0, False, json_out, None)
 
 
 def normalize_message(rules, text: str, types: dict, annotations=None,
@@ -409,7 +388,7 @@ def normalize_message(rules, text: str, types: dict, annotations=None,
     state = WalkState(text=text, strlen=len(text), types=types,
                       parsed_to=initial_parsed_to)
     for rule in rules:
-        pref = _lit_prefix(rule)
+        pref = rule.leading_literal
         if pref and not text.startswith(pref):
             q = 0
             maxq = min(len(pref), state.strlen)
@@ -420,10 +399,7 @@ def normalize_message(rules, text: str, types: dict, annotations=None,
             continue
         fields: dict = {}
         pto_before = state.parsed_to
-        flat = flat_items(rule)
-        ok = (walk_flat(state, flat, fields) if flat is not None
-              else walk_seq(state, rule.seq, 0, 0, False, fields, None))
-        if ok:
+        if walk_rule(state, rule, fields):
             event = dict(fields)
             if rule.tags:
                 event["event.tags"] = list(rule.tags)

@@ -106,8 +106,9 @@ def test_decorated_output_fold_identically():
 
 
 def test_prefilter_longer_than_dispatch_window():
-    # rule literal extends past _DISPATCH_MAX_DEPTH: the bisect arm must
-    # count it compatible; a second long-literal sibling kills the fold
+    # rule literal extends past _DISPATCH_MAX_DEPTH: the index's subtree
+    # count must count it compatible; a second long-literal sibling kills
+    # the fold
     long_a = "L" * (M._DISPATCH_MAX_DEPTH + 4) + "A"
     long_b = "L" * (M._DISPATCH_MAX_DEPTH + 4) + "B"
     rb = ("version=2\n"

@@ -79,12 +79,12 @@ def main():
         cold = None
         for _ in range(3):
             # drop ALL cross-batch memo state: the dispatch memo, the
-            # fallback memo, the fold index, and each rule's prepared
-            # fold plan (the dispatch TRIE itself is deliberately kept —
-            # it is built once per compile, not per stream).  Before
-            # round 6 the fold state survived, so the cold column partly
-            # amortized round-5 fold work and over-credited the memo.
-            for attr in ("_dispatch_memo_cache", "_fb_memo", "_fold_idx"):
+            # fallback memo and each rule's prepared fold plan (the prefix
+            # index, crb._prefix_idx, is deliberately kept — it is built
+            # once per compile, not per stream).  Before round 6 the fold
+            # state survived, so the cold column partly amortized round-5
+            # fold work and over-credited the memo.
+            for attr in ("_dispatch_memo_cache", "_fb_memo"):
                 if hasattr(crb, attr):
                     delattr(crb, attr)
             for cr in crb.rules:
