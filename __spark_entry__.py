@@ -13,6 +13,7 @@ whole rulebase engine.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -161,11 +162,134 @@ def q_parse_rate(spark, sf_dir):
 # ---- per-motif micro queries over inline-synthesized text ----
 
 
-def _motif_df(spark, sf_dir, text_expr: str, rulebase: str, keys: list[str]):
+# name -> (text expression over documents.doc_id, rulebase, fields_json
+# keys), in queries() order; motif_cef sits with the round-5 rotations
+_MOTIFS = {
+    "motif_hexnumber": (
+        "('h=0x' || substr(md5('' || doc_id), 1, 4) || ' t')",
+        "version=2\nrule=:h=%v:hexnumber% t\n",
+        ["v"],
+    ),
+    "motif_quoted": (
+        "('q=\"w' || doc_id || '\" z')",
+        "version=2\nrule=:q=%v:quoted-string% z\n",
+        ["v"],
+    ),
+    "motif_op_quoted": (
+        "(CASE WHEN doc_id % 2 = 0 THEN 'v \"x' || doc_id || '\" t' ELSE 'v y' || doc_id || ' t' END)",
+        "version=2\nrule=:v %v:op-quoted-string% t\n",
+        ["v"],
+    ),
+    "motif_char_to": (
+        "('a-' || doc_id || ';rest')",
+        "version=2\nrule=:a-%v:char-to:;%;%r:rest%\n",
+        ["v", "r"],
+    ),
+    "motif_string_to": (
+        "('pre ' || doc_id || 'SEPtail')",
+        "version=2\nrule=:pre %v:string-to:SEP%SEP%r:rest%\n",
+        ["v", "r"],
+    ),
+    "motif_char_sep": (
+        "('f1,' || (doc_id % 100) || ',,f4-' || doc_id)",
+        "version=2\nrule=:%a:char-sep:,%,%b:char-sep:,%,%c:char-sep:,%,%d:rest%\n",
+        ["a", "b", "c", "d"],
+    ),
+    "motif_word_alpha_ws": (
+        "('alpha' || (doc_id % 7) || '  w' || doc_id)",
+        "version=2\nrule=:%a:alpha%%n:number%%s:whitespace%%w:word%\n",
+        ["a", "n", "s", "w"],
+    ),
+    "motif_time12_duration": (
+        "('t ' || lpad('' || (doc_id % 13), 2, '0') || ':' || lpad('' || (doc_id % 60), 2, '0')"
+        " || ':' || lpad('' || ((doc_id * 3) % 60), 2, '0') || ' d ' || (doc_id % 100) || ':'"
+        " || lpad('' || (doc_id % 60), 2, '0') || ':' || lpad('' || (doc_id % 60), 2, '0') || ' z')",
+        "version=2\nrule=:t %t:time-12hr% d %d:duration% z\n",
+        ["t", "d"],
+    ),
+    "motif_kernel_ts": (
+        "('[' || lpad('' || (10000 + doc_id), 5, '0') || '.' || lpad('' || ((doc_id * 7919) % 1000000), 6, '0') || '] boot')",
+        "version=2\nrule=:%k:kernel-timestamp% boot\n",
+        ["k"],
+    ),
+    "motif_cee": (
+        "('@cee: {\"pid\": ' || (1000 + doc_id % 9000) || ', \"unit\": \"u' || (doc_id % 30) || '\"}')",
+        "version=2\nrule=:%c:cee-syslog%\n",
+        ["c.pid", "c.unit"],
+    ),
+    "motif_dates": (
+        "('2024-' || lpad('' || (1 + doc_id % 12), 2, '0') || '-' || lpad('' || (1 + doc_id % 28), 2, '0')"
+        " || ' ' || lpad('' || (doc_id % 24), 2, '0') || ':' || lpad('' || (doc_id % 60), 2, '0')"
+        " || ':' || lpad('' || ((doc_id * 3) % 60), 2, '0') || ' ok')",
+        "version=2\nrule=:%d:date-iso% %t:time-24hr% ok\n",
+        ["d", "t"],
+    ),
+    "motif_rfc5424": (
+        "('ts=' || (1970 + doc_id % 50) || '-' || lpad('' || (1 + doc_id % 12), 2, '0')"
+        " || '-' || lpad('' || (1 + doc_id % 28), 2, '0') || 'T' || lpad('' || (doc_id % 24), 2, '0')"
+        " || ':' || lpad('' || (doc_id % 60), 2, '0') || ':' || lpad('' || ((doc_id * 7) % 60), 2, '0') || 'Z x')",
+        "version=2\nrule=:ts=%t:date-rfc5424% x\n",
+        ["t"],
+    ),
+    "motif_checkpoint_lea": (
+        "('lea product: VPN-1; src: 10.0.0.' || (1 + doc_id % 200) || '; rule: ' || (doc_id % 50) || ';')",
+        "version=2\nrule=:lea %c:checkpoint-lea%\n",
+        ["c.product", "c.src", "c.rule"],
+    ),
+    "motif_repeat": (
+        "('r ' || (doc_id % 90) || ':' || (doc_id % 9) || ', ' || (doc_id % 7) || ':' || (doc_id % 5) || ' w')",
+        "version=2\n"
+        'rule=:r %{"name":"ps","type":"repeat","parser":[{"name":"a","type":"number"},'
+        '{"type":"literal","text":":"},{"name":"b","type":"number"}],'
+        '"while":[{"type":"literal","text":", "}]}% w\n',
+        ["ps[0].a", "ps[0].b", "ps[1].a", "ps[1].b"],
+    ),
+    "motif_string": (
+        "('s \"a b' || (doc_id % 50) || '\" e')",
+        'version=2\nrule=:s %v:string% e\n',
+        ["v"],
+    ),
+    "motif_nvl_sep": (
+        "('a=' || (doc_id % 9) || ';b=x' || doc_id)",
+        'version=2\nrule=:%f:name-value-list{"separator":";"}%\n',
+        ["f.a", "f.b"],
+    ),
+    "motif_float": (
+        "('f=' || (doc_id % 100) || '.' || (doc_id % 10) || ' z')",
+        "version=2\nrule=:f=%v:float% z\n",
+        ["v"],
+    ),
+    "motif_ipv6": (
+        "('ip6 fe80::' || substr(md5('' || doc_id), 1, 4) || ':' || substr(md5('' || doc_id), 5, 4) || ' x')",
+        "version=2\nrule=:ip6 %v:ipv6% x\n",
+        ["v"],
+    ),
+    "motif_cisco": (
+        "('con eth0:10.' || (doc_id % 250) || '.1.2/' || (1024 + doc_id % 60000)"
+        " || ' (10.9.' || (doc_id % 250) || '.1/443)')",
+        "version=2\nrule=:con %c:cisco-interface-spec%\n",
+        ["c.interface", "c.ip", "c.port", "c.ip2", "c.port2"],
+    ),
+    "motif_number_maxval": (
+        "('v=' || (doc_id % 300) || ' end')",
+        'version=2\nrule=:v=%n:number{"maxval":255}% end\n',
+        ["n"],
+    ),
+    "motif_cef": (
+        "('CEF:0|vnd|prd|1.0|sig' || (doc_id % 100) || '|nm|' || (doc_id % 10)"
+        " || '| src=10.0.0.' || (1 + doc_id % 200) || ' msg=hello world ' || doc_id || ' dst=h' || doc_id)",
+        "version=2\nrule=:%c:cef%\n",
+        ["c.SignatureID", "c.Severity", "c.Extensions.src", "c.Extensions.msg", "c.Extensions.dst"],
+    ),
+}
+
+
+def _motif_df(spark, sf_dir, name: str):
     from liblognorm_spark.compiler.compiler import compile_rulebase
     from liblognorm_spark.rulebase.loader import Rulebase
     from liblognorm_spark.runtime.matcher import normalize_df
 
+    text_expr, rulebase, keys = _MOTIFS[name]
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     docs.createOrReplaceTempView("documents")
     df = spark.sql(f"SELECT doc_id, {text_expr} AS text FROM documents")
@@ -173,209 +297,6 @@ def _motif_df(spark, sf_dir, text_expr: str, rulebase: str, keys: list[str]):
     out = normalize_df(df, crb, text_col="text")
     cols = [F.col("doc_id")] + [_jget("fields_json", k).alias(k.replace(".", "_")) for k in keys]
     return out.filter(F.col("unparsed_data").isNull()).select(*cols)
-
-
-MOTIF_NUMBER_TEXT = "('v=' || (doc_id % 300) || ' end')"
-MOTIF_NUMBER_RB = 'version=2\nrule=:v=%n:number{"maxval":255}% end\n'
-
-
-def q_motif_number_maxval(spark, sf_dir):
-    return _motif_df(spark, sf_dir, MOTIF_NUMBER_TEXT, MOTIF_NUMBER_RB, ["n"])
-
-
-MOTIF_FLOAT_TEXT = "('f=' || (doc_id % 100) || '.' || (doc_id % 10) || ' z')"
-MOTIF_FLOAT_RB = "version=2\nrule=:f=%v:float% z\n"
-
-
-def q_motif_float(spark, sf_dir):
-    return _motif_df(spark, sf_dir, MOTIF_FLOAT_TEXT, MOTIF_FLOAT_RB, ["v"])
-
-
-MOTIF_HEX_TEXT = "('h=0x' || substr(md5('' || doc_id), 1, 4) || ' t')"
-MOTIF_HEX_RB = "version=2\nrule=:h=%v:hexnumber% t\n"
-
-
-def q_motif_hexnumber(spark, sf_dir):
-    return _motif_df(spark, sf_dir, MOTIF_HEX_TEXT, MOTIF_HEX_RB, ["v"])
-
-
-MOTIF_QUOTED_TEXT = "('q=\"w' || doc_id || '\" z')"
-MOTIF_QUOTED_RB = "version=2\nrule=:q=%v:quoted-string% z\n"
-
-
-def q_motif_quoted(spark, sf_dir):
-    return _motif_df(spark, sf_dir, MOTIF_QUOTED_TEXT, MOTIF_QUOTED_RB, ["v"])
-
-
-MOTIF_CHARTO_TEXT = "('a-' || doc_id || ';rest')"
-MOTIF_CHARTO_RB = "version=2\nrule=:a-%v:char-to:;%;%r:rest%\n"
-
-
-def q_motif_char_to(spark, sf_dir):
-    return _motif_df(spark, sf_dir, MOTIF_CHARTO_TEXT, MOTIF_CHARTO_RB, ["v", "r"])
-
-
-MOTIF_DATES_TEXT = (
-    "('2024-' || lpad('' || (1 + doc_id % 12), 2, '0') || '-' || lpad('' || (1 + doc_id % 28), 2, '0')"
-    " || ' ' || lpad('' || (doc_id % 24), 2, '0') || ':' || lpad('' || (doc_id % 60), 2, '0')"
-    " || ':' || lpad('' || ((doc_id * 3) % 60), 2, '0') || ' ok')"
-)
-MOTIF_DATES_RB = "version=2\nrule=:%d:date-iso% %t:time-24hr% ok\n"
-
-
-def q_motif_dates(spark, sf_dir):
-    return _motif_df(spark, sf_dir, MOTIF_DATES_TEXT, MOTIF_DATES_RB, ["d", "t"])
-
-
-MOTIF_RFC5424_TEXT = (
-    "('ts=' || (1970 + doc_id % 50) || '-' || lpad('' || (1 + doc_id % 12), 2, '0')"
-    " || '-' || lpad('' || (1 + doc_id % 28), 2, '0') || 'T' || lpad('' || (doc_id % 24), 2, '0')"
-    " || ':' || lpad('' || (doc_id % 60), 2, '0') || ':' || lpad('' || ((doc_id * 7) % 60), 2, '0') || 'Z x')"
-)
-MOTIF_RFC5424_RB = "version=2\nrule=:ts=%t:date-rfc5424% x\n"
-
-
-def q_motif_rfc5424(spark, sf_dir):
-    return _motif_df(spark, sf_dir, MOTIF_RFC5424_TEXT, MOTIF_RFC5424_RB, ["t"])
-
-
-MOTIF_IPV6_TEXT = (
-    "('ip6 fe80::' || substr(md5('' || doc_id), 1, 4) || ':' || substr(md5('' || doc_id), 5, 4) || ' x')"
-)
-MOTIF_IPV6_RB = "version=2\nrule=:ip6 %v:ipv6% x\n"
-
-
-def q_motif_ipv6(spark, sf_dir):
-    return _motif_df(spark, sf_dir, MOTIF_IPV6_TEXT, MOTIF_IPV6_RB, ["v"])
-
-
-MOTIF_CISCO_TEXT = (
-    "('con eth0:10.' || (doc_id % 250) || '.1.2/' || (1024 + doc_id % 60000)"
-    " || ' (10.9.' || (doc_id % 250) || '.1/443)')"
-)
-MOTIF_CISCO_RB = "version=2\nrule=:con %c:cisco-interface-spec%\n"
-
-
-def q_motif_cisco(spark, sf_dir):
-    return _motif_df(
-        spark, sf_dir, MOTIF_CISCO_TEXT, MOTIF_CISCO_RB,
-        ["c.interface", "c.ip", "c.port", "c.ip2", "c.port2"],
-    )
-
-
-MOTIF_CEF_TEXT = (
-    "('CEF:0|vnd|prd|1.0|sig' || (doc_id % 100) || '|nm|' || (doc_id % 10)"
-    " || '| src=10.0.0.' || (1 + doc_id % 200) || ' msg=hello world ' || doc_id || ' dst=h' || doc_id)"
-)
-MOTIF_CEF_RB = "version=2\nrule=:%c:cef%\n"
-
-
-def q_motif_cef(spark, sf_dir):
-    return _motif_df(
-        spark, sf_dir, MOTIF_CEF_TEXT, MOTIF_CEF_RB,
-        ["c.SignatureID", "c.Severity", "c.Extensions.src", "c.Extensions.msg", "c.Extensions.dst"],
-    )
-
-
-MOTIF_LEA_TEXT = "('lea product: VPN-1; src: 10.0.0.' || (1 + doc_id % 200) || '; rule: ' || (doc_id % 50) || ';')"
-MOTIF_LEA_RB = "version=2\nrule=:lea %c:checkpoint-lea%\n"
-
-
-def q_motif_checkpoint_lea(spark, sf_dir):
-    return _motif_df(spark, sf_dir, MOTIF_LEA_TEXT, MOTIF_LEA_RB, ["c.product", "c.src", "c.rule"])
-
-
-MOTIF_REPEAT_TEXT = "('r ' || (doc_id % 90) || ':' || (doc_id % 9) || ', ' || (doc_id % 7) || ':' || (doc_id % 5) || ' w')"
-MOTIF_REPEAT_RB = (
-    "version=2\n"
-    'rule=:r %{"name":"ps","type":"repeat","parser":[{"name":"a","type":"number"},'
-    '{"type":"literal","text":":"},{"name":"b","type":"number"}],'
-    '"while":[{"type":"literal","text":", "}]}% w\n'
-)
-
-
-def q_motif_repeat(spark, sf_dir):
-    return _motif_df(
-        spark, sf_dir, MOTIF_REPEAT_TEXT, MOTIF_REPEAT_RB,
-        ["ps[0].a", "ps[0].b", "ps[1].a", "ps[1].b"],
-    )
-
-
-MOTIF_STRTO_TEXT = "('pre ' || doc_id || 'SEPtail')"
-MOTIF_STRTO_RB = "version=2\nrule=:pre %v:string-to:SEP%SEP%r:rest%\n"
-
-
-def q_motif_string_to(spark, sf_dir):
-    return _motif_df(spark, sf_dir, MOTIF_STRTO_TEXT, MOTIF_STRTO_RB, ["v", "r"])
-
-
-MOTIF_CHARSEP_TEXT = "('f1,' || (doc_id % 100) || ',,f4-' || doc_id)"
-MOTIF_CHARSEP_RB = "version=2\nrule=:%a:char-sep:,%,%b:char-sep:,%,%c:char-sep:,%,%d:rest%\n"
-
-
-def q_motif_char_sep(spark, sf_dir):
-    return _motif_df(spark, sf_dir, MOTIF_CHARSEP_TEXT, MOTIF_CHARSEP_RB, ["a", "b", "c", "d"])
-
-
-MOTIF_WORDS_TEXT = "('alpha' || (doc_id % 7) || '  w' || doc_id)"
-MOTIF_WORDS_RB = "version=2\nrule=:%a:alpha%%n:number%%s:whitespace%%w:word%\n"
-
-
-def q_motif_word_alpha_ws(spark, sf_dir):
-    return _motif_df(spark, sf_dir, MOTIF_WORDS_TEXT, MOTIF_WORDS_RB, ["a", "n", "s", "w"])
-
-
-MOTIF_TIMES_TEXT = (
-    "('t ' || lpad('' || (doc_id % 13), 2, '0') || ':' || lpad('' || (doc_id % 60), 2, '0')"
-    " || ':' || lpad('' || ((doc_id * 3) % 60), 2, '0') || ' d ' || (doc_id % 100) || ':'"
-    " || lpad('' || (doc_id % 60), 2, '0') || ':' || lpad('' || (doc_id % 60), 2, '0') || ' z')"
-)
-MOTIF_TIMES_RB = "version=2\nrule=:t %t:time-12hr% d %d:duration% z\n"
-
-
-def q_motif_time12_duration(spark, sf_dir):
-    df = _motif_df(spark, sf_dir, MOTIF_TIMES_TEXT, MOTIF_TIMES_RB, ["t", "d"])
-    return df
-
-
-MOTIF_KTS_TEXT = "('[' || lpad('' || (10000 + doc_id), 5, '0') || '.' || lpad('' || ((doc_id * 7919) % 1000000), 6, '0') || '] boot')"
-MOTIF_KTS_RB = "version=2\nrule=:%k:kernel-timestamp% boot\n"
-
-
-def q_motif_kernel_ts(spark, sf_dir):
-    return _motif_df(spark, sf_dir, MOTIF_KTS_TEXT, MOTIF_KTS_RB, ["k"])
-
-
-MOTIF_OPQ_TEXT = "(CASE WHEN doc_id % 2 = 0 THEN 'v \"x' || doc_id || '\" t' ELSE 'v y' || doc_id || ' t' END)"
-MOTIF_OPQ_RB = "version=2\nrule=:v %v:op-quoted-string% t\n"
-
-
-def q_motif_op_quoted(spark, sf_dir):
-    return _motif_df(spark, sf_dir, MOTIF_OPQ_TEXT, MOTIF_OPQ_RB, ["v"])
-
-
-MOTIF_CEE_TEXT = "('@cee: {\"pid\": ' || (1000 + doc_id % 9000) || ', \"unit\": \"u' || (doc_id % 30) || '\"}')"
-MOTIF_CEE_RB = "version=2\nrule=:%c:cee-syslog%\n"
-
-
-def q_motif_cee(spark, sf_dir):
-    return _motif_df(spark, sf_dir, MOTIF_CEE_TEXT, MOTIF_CEE_RB, ["c.pid", "c.unit"])
-
-
-MOTIF_STRING_TEXT = "('s \"a b' || (doc_id % 50) || '\" e')"
-MOTIF_STRING_RB = 'version=2\nrule=:s %v:string% e\n'
-
-
-def q_motif_string(spark, sf_dir):
-    return _motif_df(spark, sf_dir, MOTIF_STRING_TEXT, MOTIF_STRING_RB, ["v"])
-
-
-MOTIF_NVSEP_TEXT = "('a=' || (doc_id % 9) || ';b=x' || doc_id)"
-MOTIF_NVSEP_RB = 'version=2\nrule=:%f:name-value-list{"separator":";"}%\n'
-
-
-def q_motif_nvl_sep(spark, sf_dir):
-    return _motif_df(spark, sf_dir, MOTIF_NVSEP_TEXT, MOTIF_NVSEP_RB, ["f.a", "f.b"])
 
 
 # ---- relational / OLAP ----
@@ -1046,26 +967,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "media_decode_real": q_media_decode_real,
         "frame_sample_real": q_frame_sample_real,
         # ---- position 51+ (driver tail; oracle-checked by pytest) ----
-        "motif_hexnumber": q_motif_hexnumber,
-        "motif_quoted": q_motif_quoted,
-        "motif_op_quoted": q_motif_op_quoted,
-        "motif_char_to": q_motif_char_to,
-        "motif_string_to": q_motif_string_to,
-        "motif_char_sep": q_motif_char_sep,
-        "motif_word_alpha_ws": q_motif_word_alpha_ws,
-        "motif_time12_duration": q_motif_time12_duration,
-        "motif_kernel_ts": q_motif_kernel_ts,
-        "motif_cee": q_motif_cee,
-        "motif_dates": q_motif_dates,
-        "motif_rfc5424": q_motif_rfc5424,
-        "motif_checkpoint_lea": q_motif_checkpoint_lea,
-        "motif_repeat": q_motif_repeat,
-        "motif_string": q_motif_string,
-        "motif_nvl_sep": q_motif_nvl_sep,
-        "motif_float": q_motif_float,
-        "motif_ipv6": q_motif_ipv6,
-        "motif_cisco": q_motif_cisco,
-        "motif_number_maxval": q_motif_number_maxval,
+        **{name: partial(_motif_df, name=name) for name in _MOTIFS
+           if name != "motif_cef"},
         "media_decode": q_media_decode,
         # round-5 rotations out of the window (see the head comment;
         # tags_explode displaced by unigram_nll — tagging stays
@@ -1075,7 +978,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pipeline_sink_counts": q_pipeline_sink_counts,
         "parse_json_motif": q_parse_json_motif,
         "parse_net": q_parse_net,
-        "motif_cef": q_motif_cef,
+        "motif_cef": partial(_motif_df, name="motif_cef"),
         "frame_sample": q_frame_sample,
     }
 
