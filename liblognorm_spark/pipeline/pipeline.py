@@ -26,6 +26,7 @@ from liblognorm_spark.compiler.compiler import compile_rulebase
 from liblognorm_spark.pipeline.fixture_rulebase import routing_rulebase
 from liblognorm_spark.rulebase.loader import Rulebase
 from liblognorm_spark.runtime.matcher import normalize_df
+from liblognorm_spark.sources.readers import iceberg_loadable
 
 # deterministic enrichment lookup tables (FIXTURES.md §1)
 LANG_MAP = [
@@ -97,17 +98,17 @@ def aggregate_stage(routed):
 def write_sinks(routed, out_dir: str, fmt: str = "parquet"):
     """Single-pass fan-out: partitionBy(sink) writes one directory per sink.
 
-    Iceberg is used when its catalog jars are on the classpath (not in this
-    image); parquet directory layout is the fallback with identical
-    partition semantics."""
+    ``fmt="iceberg"`` writes Iceberg when its jars are on the classpath (not
+    in this image) and otherwise the parquet directory layout, which has
+    identical partition semantics.  A write that fails raises, and an
+    unknown ``fmt`` is a ValueError."""
+    if fmt not in ("parquet", "iceberg"):
+        raise ValueError(f"unknown sink format {fmt!r}")
     writer = routed.write.mode("overwrite").partitionBy("sink")
-    try:
-        if fmt == "iceberg":
-            writer.format("iceberg").save(out_dir)
-            return
-    except Exception:
-        pass
-    writer.parquet(out_dir)
+    if fmt == "iceberg" and iceberg_loadable(routed.sparkSession):
+        writer.format("iceberg").save(out_dir)
+    else:
+        writer.parquet(out_dir)
 
 
 def run_pipeline(spark, pages, out_dir: str | None = None, rulebase_text: str | None = None):

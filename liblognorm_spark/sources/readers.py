@@ -10,6 +10,20 @@ being present (not in this image) with parquet-directory fallback.
 from __future__ import annotations
 
 
+def iceberg_loadable(spark) -> bool:
+    """Are the Iceberg runtime jars on the classpath?  Asks Spark's own
+    format lookup, so a real Iceberg read or write error is never mistaken
+    for their absence."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        spark._jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
+            "iceberg", spark._jsparkSession.sessionState().conf())
+    except Py4JJavaError:
+        return False
+    return True
+
+
 def read_logs(spark, path: str, fmt: str = "text", text_col: str = "value", schema=None):
     """Returns (df, text_col) ready for normalize_df."""
     from pyspark.sql import functions as F
@@ -29,9 +43,8 @@ def read_logs(spark, path: str, fmt: str = "text", text_col: str = "value", sche
     if fmt == "csv":
         return spark.read.csv(path, header=True), text_col
     if fmt == "iceberg":
-        try:
+        if iceberg_loadable(spark):
             return spark.read.format("iceberg").load(path), text_col
-        except Exception:
-            # iceberg jars absent: fall back to the parquet data dir layout
-            return spark.read.parquet(path), text_col
+        # iceberg jars absent: the parquet data dir layout write_sinks wrote
+        return spark.read.parquet(path), text_col
     raise ValueError(f"unknown format {fmt!r}")

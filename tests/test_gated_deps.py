@@ -52,6 +52,39 @@ def test_iceberg_write_falls_back_to_parquet(spark, tmp_path):
     assert any(d.startswith("sink=") for d in os.listdir(out))
 
 
+def test_iceberg_probe_agrees_with_classpath(spark):
+    from liblognorm_spark.sources.readers import iceberg_loadable
+
+    assert iceberg_loadable(spark) == HAS_ICEBERG
+
+
+def test_write_sinks_rejects_unknown_format(spark, tmp_path):
+    """An unknown fmt must not silently become a parquet write."""
+    from liblognorm_spark.pipeline.pipeline import write_sinks
+
+    df = spark.createDataFrame([("a", "s1")], "text string, sink string")
+    out = tmp_path / "sinks"
+    with pytest.raises(ValueError, match="orc"):
+        write_sinks(df, str(out), fmt="orc")
+    assert not out.exists()
+
+
+@pytest.mark.skipif(HAS_ICEBERG, reason="the iceberg save must fail, and with the jar it may not")
+def test_failing_iceberg_write_raises(spark, tmp_path, monkeypatch):
+    """Once Iceberg is deemed available, its write errors must propagate
+    instead of turning into a parquet write."""
+    from py4j.protocol import Py4JJavaError
+
+    from liblognorm_spark.pipeline import pipeline
+
+    monkeypatch.setattr(pipeline, "iceberg_loadable", lambda spark: True)
+    df = spark.createDataFrame([("a", "s1")], "text string, sink string")
+    out = tmp_path / "sinks"
+    with pytest.raises(Py4JJavaError, match="DATA_SOURCE_NOT_FOUND"):
+        pipeline.write_sinks(df, str(out), fmt="iceberg")
+    assert not out.exists()
+
+
 @pytest.mark.skipif(not HAS_ICEBERG, reason="iceberg-spark-runtime jar not on classpath")
 def test_iceberg_real_roundtrip(spark, tmp_path):
     """Activates when the image gains iceberg jars: a real Iceberg table
